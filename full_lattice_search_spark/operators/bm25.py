@@ -86,8 +86,18 @@ def bm25_scores(
                 )
             ),
         )
+        # each doc's per-term parts are summed in token order: a float sum
+        # in row-arrival order would tie the score's last bits to the
+        # physical layout of ``tokens`` (file count, shuffle fetch order)
+        .withColumn("p", F.col("idf") * F.col("tf_norm"))
         .groupBy("doc_id")
-        .agg(F.sum(F.col("idf") * F.col("tf_norm")).alias("bm25"))
+        .agg(F.array_sort(F.collect_list(F.struct("token", "p"))).alias("ps"))
+        .select(
+            "doc_id",
+            F.aggregate("ps", F.lit(0.0), lambda acc, x: acc + x["p"]).alias(
+                "bm25"
+            ),
+        )
     )
     if round_to is not None:
         scored = scored.select(

@@ -434,9 +434,12 @@ def extract_spans_salted(
 ) -> DataFrame:
     """Mega-document path: span-level parallelism.
 
-    posexplode → repartition by (doc_id, offset) so one giant document's
+    explode_outer → repartition by (doc_id, offset) so one giant document's
     spans spread across the cluster → extract each span → re-merge with
-    collect_list + array_sort keyed by source offset → renumber.  Output is
+    collect_list + array_sort keyed by source offset → renumber.  A doc
+    with no spans keeps one placeholder row (null span, which extraction
+    never keeps) and the merge collects only kept spans, so every input doc
+    gets exactly one output row without re-scanning the input.  Output is
     bit-identical to ``extract_spans`` (property-tested)."""
     config = config or LatticeConfig()
     spark = docs.sparkSession
@@ -444,13 +447,14 @@ def extract_spans_salted(
 
     flat = docs.select(
         F.col(doc_id_col).cast("string").alias("doc_id"),
-        F.explode(spans_col).alias("s"),
+        F.explode_outer(spans_col).alias("s"),
     ).select(
         "doc_id",
         F.col("s.kind").alias("kind"),
         F.col("s.text").alias("text"),
         F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
+        # the no-spans placeholder needs an offset for the int64 cast below
+        F.coalesce(F.col("s.offset"), F.lit(-1)).alias("offset"),
     )
     # the salt: spread a single doc's spans across partitions
     flat = flat.repartition(n_part, "doc_id", "offset")
@@ -478,14 +482,14 @@ def extract_spans_salted(
 
     extracted = flat.mapInPandas(run, schema=span_schema)
 
+    kept = F.when(
+        F.col("keep"), F.struct("offset", "kind", "text", "media_ref")
+    )
     merged = (
-        extracted.filter("keep")
-        .groupBy("doc_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("offset", "kind", "text", "media_ref"))
-            ).alias("ordered")
-        )
+        extracted.groupBy("doc_id")
+        # collect_list skips the nulls of dropped spans: a doc whose spans
+        # were all dropped still gets its row, with an empty list
+        .agg(F.array_sort(F.collect_list(kept)).alias("ordered"))
         .select(
             "doc_id",
             F.expr(
@@ -495,24 +499,12 @@ def extract_spans_salted(
             ).alias("spans"),
         )
     )
-    # docs whose spans were all dropped still get a row (empty spans)
-    all_docs = docs.select(F.col(doc_id_col).cast("string").alias("doc_id"))
-    merged = all_docs.join(merged, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(
-            "spans", F.expr("cast(array() as array<struct<kind:string,"
-                            "text:string,media_ref:string,offset:int>>)")
-        ).alias("spans"),
-    )
     return merged.select(
         "doc_id",
         "spans",
         F.size("spans").cast("int").alias("n_spans"),
-        F.coalesce(
-            F.expr(
-                "aggregate(spans, 0L, (acc, s) -> "
-                "acc + coalesce(length(s.text), 0L))"
-            ),
-            F.lit(0).cast("long"),
+        F.expr(
+            "aggregate(spans, 0L, (acc, s) -> "
+            "acc + coalesce(length(s.text), 0L))"
         ).alias("n_text_chars"),
     )

@@ -10,11 +10,18 @@ partitions.  Each run:
    salted span-level path (explicit skew handling — one giant document can
    no longer pin a single task);
 3. processes pending buckets in bounded groups (``buckets_per_job``): each
-   group writes its output parquet partitioned by bucket (dynamic partition
-   overwrite, so a re-processed bucket replaces itself rather than
-   duplicating) and THEN appends one lineage+metrics row per bucket to the
-   checkpoint table — a crash loses at most one group's work, and progress
-   made before the crash survives both across runs and within one.
+   group writes its output through ``sources.catalog.write_bucketed`` and
+   THEN appends one lineage+metrics row per bucket to the checkpoint table
+   (one file per group) — a crash loses at most one group's work, and
+   progress made before the crash survives both across runs and within one.
+
+Output layout: ``write_bucketed`` rebalances the rows by ``bucket`` before
+the write, so a bucket directory holds one file however many tasks produced
+its rows (AQE splits a skewed bucket across tasks, so one hot bucket cannot
+pin a task) — the analogue of Iceberg's ``write.distribution-mode=hash``.
+It also owns dynamic partition overwrite as a per-write option, so a
+re-processed bucket replaces itself rather than duplicating, and the
+session conf is left as the caller set it.
 
 On a real cluster the same code runs over Iceberg with
 ``spark.read.format("iceberg")`` — the bucket column maps onto the table's
@@ -35,6 +42,7 @@ from full_lattice_search_spark.operators.extract import (
     extract_spans_salted,
 )
 from full_lattice_search_spark.schema import CHECKPOINT_SCHEMA
+from full_lattice_search_spark.sources.catalog import write_bucketed
 
 DEFAULT_SALT_THRESHOLD = 64
 
@@ -99,9 +107,7 @@ def _process_bucket_group(
             F.sum(F.col("n_spans") * cond).cast("long").alias(f"s{b}"),
             F.sum(F.col("n_text_chars") * cond).cast("long").alias(f"c{b}"),
         ]
-    out.observe(obs, aggs[0], *aggs[1:]).write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(output_dir)
+    write_bucketed(out.observe(obs, aggs[0], *aggs[1:]), output_dir)
 
     wall = time.time() - t0
     got = obs.get  # blocks until the write action has fired the metrics
@@ -119,9 +125,10 @@ def _process_bucket_group(
             "wall_secs": float(wall),
         }
     )
-    spark.createDataFrame(metrics_pdf, CHECKPOINT_SCHEMA).write.mode(
-        "append"
-    ).parquet(checkpoint_dir)
+    # one file per group: every resume re-reads the whole checkpoint
+    spark.createDataFrame(metrics_pdf, CHECKPOINT_SCHEMA).coalesce(
+        1
+    ).write.mode("append").parquet(checkpoint_dir)
     return int(metrics_pdf["n_docs"].sum())
 
 
@@ -165,7 +172,6 @@ def run_extraction(
     size = buckets_per_job or len(pending)
     groups = [pending[i:i + size] for i in range(0, len(pending), size)]
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     n_docs = 0
     for group in groups:
         n_docs += _process_bucket_group(

@@ -13,10 +13,15 @@ dispatch keeps the two spellable from config/CLI without code changes:
   table: Iceberg, Delta, Hive — whatever the session catalog resolves)
 - anything else         → ``spark.read.parquet(path)``
 
-Write-side mapping documented in ``pipeline.py``: the ``bucket`` output
-column corresponds to the Iceberg table's bucket partition transform, and
-the dynamic-partition-overwrite commit maps onto Iceberg's
-``overwrite-partitions`` snapshot commit (idempotent per-bucket replace).
+Write side: ``write_bucketed`` is the package's one bucketed writer.  It
+rebalances the rows by the partition column first (the ``REBALANCE`` hint:
+a hash exchange whose partitions AQE coalesces when small and splits when
+skewed), so each bucket is written by one task as one file — the analogue
+of Iceberg's ``write.distribution-mode=hash``.  It owns dynamic partition
+overwrite as a per-write option, never in the session conf, which maps
+onto Iceberg's ``overwrite-partitions`` snapshot commit (idempotent
+per-bucket replace); the ``bucket`` column maps onto the table's bucket
+partition transform.
 """
 
 from __future__ import annotations
@@ -43,11 +48,15 @@ def write_bucketed(
     partition_col: str = "bucket",
     mode: str = "overwrite",
 ) -> None:
-    """Write partitioned output to parquet or an Iceberg table.
+    """Write partitioned output to parquet or an Iceberg table, rebalanced
+    by ``partition_col``: one file per partition value (more only for a
+    value AQE splits as skewed).
 
-    Parquet path: dynamic partition overwrite (a re-processed bucket
-    replaces itself).  Iceberg path: ``overwritePartitions`` — the same
-    idempotent per-bucket replacement as a snapshot commit."""
+    Parquet path: dynamic partition overwrite as a per-write option (a
+    re-processed bucket replaces itself; the session conf is untouched).
+    Iceberg path: ``overwritePartitions`` — the same idempotent per-bucket
+    replacement as a snapshot commit."""
+    df = df.hint("rebalance", partition_col)
     if target.startswith(ICEBERG_PREFIX):
         name = target[len(ICEBERG_PREFIX):]
         writer = df.writeTo(name).using("iceberg")
@@ -58,6 +67,7 @@ def write_bucketed(
         return
     (
         df.write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
         .parquet(target)
     )

@@ -13,6 +13,8 @@ Layout note: on a real deployment this is an Iceberg table with
 ``bucket(n, token)`` partition transform plus a secondary sort on
 ``(doc_id, abs_pos)``; plain parquet `partitionBy` reproduces the pruning
 behavior in this sandbox.
+The postings are rebalanced by bucket before the write, so each bucket is
+one file — what Iceberg's ``write.distribution-mode=hash`` does.
 """
 
 from __future__ import annotations
@@ -41,8 +43,11 @@ def write_token_index(
     n_token_buckets: int = DEFAULT_TOKEN_BUCKETS,
 ) -> None:
     """Tokenize the corpus and persist the postings partitioned by token
-    bucket.  One shuffle (the partitionBy write redistribution is avoided —
-    rows are appended under their partition directory per task).
+    bucket.  The tokens are rebalanced by bucket before the write (a hash
+    exchange; AQE splits a skewed bucket), so each bucket directory holds
+    one file rather than one per tokenizer task.  The write is a static
+    full overwrite: a rebuild replaces every bucket, whatever the
+    session's ``partitionOverwriteMode``.
 
     Also persists two statistics tables (the index-statistics analog —
     Lucene keeps norms/doc lengths/term dictionaries at index time):
@@ -66,7 +71,13 @@ def write_token_index(
     tokens = lattice_tokenize(docs, config).withColumn(
         "token_bucket", token_bucket_col("token", n_token_buckets)
     )
-    tokens.write.mode("overwrite").partitionBy("token_bucket").parquet(path)
+    (
+        tokens.hint("rebalance", "token_bucket")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .partitionBy("token_bucket")
+        .parquet(path)
+    )
     indexed = docs.sparkSession.read.parquet(path)  # re-read, not re-tokenize
     (
         indexed

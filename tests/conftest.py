@@ -20,3 +20,23 @@ def spark():
     spark.sparkContext.setLogLevel("WARN")
     yield spark
     spark.stop()
+
+
+OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+
+@pytest.fixture(autouse=True)
+def _no_overwrite_mode_leak(request):
+    """Fail any test that leaves the session's partition overwrite mode
+    changed: under a leaked ``dynamic`` a later full overwrite keeps the
+    stale partitions its new data does not touch."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    spark = request.getfixturevalue("spark")
+    before = spark.conf.get(OVERWRITE_MODE)
+    yield
+    after = spark.conf.get(OVERWRITE_MODE)
+    if after != before:
+        spark.conf.set(OVERWRITE_MODE, before)
+        pytest.fail(f"{OVERWRITE_MODE} leaked: {before!r} -> {after!r}")

@@ -57,22 +57,20 @@ def test_write_bucketed_dynamic_partition_overwrite(spark, tmp_path):
     df = spark.range(100).select(
         F.col("id").alias("doc_id"), (F.col("id") % 4).alias("bucket")
     )
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        write_bucketed(df, target)
-        # rewrite bucket 2 only, with doubled doc_ids
-        patch = df.filter(F.col("bucket") == 2).withColumn(
-            "doc_id", F.col("doc_id") * 1000
-        )
-        write_bucketed(patch, target)
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+    # the session stays at its default (static) overwrite mode: dynamic
+    # overwrite is write_bucketed's own per-write option
+    write_bucketed(df, target)
+    # rewrite bucket 2 only, with doubled doc_ids
+    patch = df.filter(F.col("bucket") == 2).withColumn(
+        "doc_id", F.col("doc_id") * 1000
+    )
+    write_bucketed(patch, target)
     out = spark.read.parquet(target)
     assert out.count() == 100
     b2 = [r["doc_id"] for r in out.filter("bucket = 2").collect()]
     assert all(d >= 1000 for d in b2) and len(b2) == 25
     assert out.filter("bucket = 1").filter("doc_id >= 1000").count() == 0
+    # rebalanced by bucket: one data file per bucket directory
+    for b in range(4):
+        files = (tmp_path / "bucketed" / f"bucket={b}").glob("*.parquet")
+        assert len(list(files)) == 1

@@ -114,15 +114,36 @@ def test_extract_spans_spark(spark):
 
 
 def test_direct_and_salted_paths_identical(spark):
-    docs = synth_documents(spark, 40, seed=7, mega_every=10).cache()
+    # edge docs: no spans (null / empty list), every span cleaned to
+    # nothing, and a hand-built mega-doc (kept, dropped and media spans,
+    # listed in reverse source order) next to the synthetic docs
+    mega = [
+        (("text", f"word{i} |", None, i) if i % 3 else ("text", " ", None, i))
+        for i in range(90)
+    ] + [("image", None, "media://img/mega/1", 90)]
+    edge = spark.createDataFrame(
+        [
+            ("edge-null", None),
+            ("edge-empty", []),
+            ("edge-dropped", [("text", "   ", None, 0),
+                              ("text", "<nav>menu</nav>", None, 1)]),
+            ("edge-mega", mega[::-1]),
+        ],
+        DOCUMENTS_SCHEMA,
+    )
+    docs = synth_documents(spark, 40, seed=7, mega_every=10).unionByName(
+        edge
+    ).cache()
     a = extract_spans(docs, CFG).orderBy("doc_id").collect()
     b = extract_spans_salted(docs, CFG).orderBy("doc_id").collect()
-    assert len(a) == len(b) == 40
-    for ra, rb in zip(a, b):
-        assert ra["doc_id"] == rb["doc_id"]
-        assert ra["n_spans"] == rb["n_spans"]
-        assert ra["spans"] == rb["spans"]
-        assert ra["n_text_chars"] == rb["n_text_chars"]
+    assert len(a) == len(b) == 44
+    assert a == b
+    by_id = {r["doc_id"]: r for r in b}
+    for doc_id in ("edge-null", "edge-empty", "edge-dropped"):
+        row = by_id[doc_id]
+        assert (row["spans"], row["n_spans"], row["n_text_chars"]) == ([], 0, 0)
+    mega_spans = by_id["edge-mega"]["spans"]
+    assert [s["offset"] for s in mega_spans] == list(range(61))
 
 
 def test_datagen_deterministic_across_parallelism(spark):

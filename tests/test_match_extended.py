@@ -84,6 +84,30 @@ def test_bm25_scores_spark(spark):
     assert abs(scored["doc2"] - idf_brown * tfn) < 1e-9
 
 
+def test_bm25_scores_independent_of_token_layout(spark):
+    """The per-doc BM25 sum is a float sum over the doc's terms: its order
+    must not follow the token table's physical layout, or the same index
+    scores differently depending on how many files its writer produced."""
+    from full_lattice_search_spark.datagen import VOCAB, synth_documents
+    from full_lattice_search_spark.functions.tokenizer import lattice_tokenize
+
+    tokens = lattice_tokenize(
+        synth_documents(spark, 200, seed=31, mega_every=0), LatticeConfig()
+    ).select("doc_id", "token").cache()
+    terms = [str(t) for t in VOCAB]
+
+    def scores(layout):
+        rows = bm25_scores(layout, terms).collect()
+        return {r["doc_id"]: r["bm25"] for r in rows}
+
+    want = scores(tokens)
+    assert len(want) == 200
+    assert scores(tokens.repartition(1)) == want
+    by_token = tokens.repartition(7, "token").sortWithinPartitions("token")
+    assert scores(by_token) == want
+    tokens.unpersist()
+
+
 def test_idf_literal_cap_falls_back_to_join(spark, monkeypatch):
     """Over the literal cap the composed doc-scan scoring switches to the
     relational join on the df frame — same scores (float64 summation

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -147,3 +149,60 @@ def test_no_output_rescan_for_metrics(spark, dirs, monkeypatch):
     for r in ckpt.collect():
         want = per_bucket.get(r["bucket"], (0, 0))
         assert (r["n_docs"], r["n_spans"]) == (want[0], want[1] or 0)
+
+
+def _data_files(directory):
+    return list(Path(directory).glob("*.parquet"))
+
+
+@pytest.mark.parametrize("buckets_per_job", [None, 3])
+def test_one_file_per_output_bucket(spark, tmp_path, buckets_per_job):
+    """The output write is rebalanced by bucket: each bucket directory
+    holds exactly one data file, however many tasks produced its rows."""
+    out_dir, ckpt_dir = tmp_path / "out", tmp_path / "ckpt"
+    docs = synth_documents(spark, 120, seed=17, mega_every=30, partitions=4)
+    m = run_extraction(spark, docs, str(out_dir), str(ckpt_dir), n_buckets=8,
+                       buckets_per_job=buckets_per_job)
+    assert m["docs"] == 120
+    bucket_dirs = sorted(out_dir.glob("bucket=*"))
+    assert len(bucket_dirs) == 8
+    for d in bucket_dirs:
+        assert len(_data_files(d)) == 1, d
+
+
+def test_checkpoint_one_file_per_group(spark, dirs):
+    out_dir, ckpt_dir = dirs
+    docs = synth_documents(spark, 40, seed=19, mega_every=0)
+    run_extraction(spark, docs, out_dir, ckpt_dir, n_buckets=8,
+                   buckets_per_job=4)
+    assert len(_data_files(ckpt_dir)) == 2
+    assert completed_buckets(spark, ckpt_dir) == set(range(8))
+
+
+def test_run_extraction_leaves_overwrite_mode_static(spark, tmp_path):
+    """run_extraction's dynamic partition overwrite is a per-write option:
+    it must not leak into the session, where it would turn a later full
+    rebuild of the token index into a partial one that keeps the stale
+    postings of every bucket the new corpus does not touch."""
+    from full_lattice_search_spark.config import LatticeConfig
+    from full_lattice_search_spark.functions.tokenizer import lattice_tokenize
+    from full_lattice_search_spark.sources.token_index import write_token_index
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    index = str(tmp_path / "index")
+    write_token_index(synth_documents(spark, 200, seed=23, mega_every=0), index)
+
+    before = spark.conf.get(key)
+    run_extraction(spark, synth_documents(spark, 20, seed=23, mega_every=0),
+                   str(tmp_path / "out"), str(tmp_path / "ckpt"), n_buckets=4)
+    assert spark.conf.get(key) == before
+
+    small = synth_documents(spark, 3, seed=29, mega_every=0)
+    write_token_index(small, index)
+    def doc_ids(df):
+        return {r["doc_id"] for r in df.select("doc_id").distinct().collect()}
+
+    postings = spark.read.parquet(index)
+    assert doc_ids(postings) == doc_ids(small)
+    assert postings.count() == lattice_tokenize(small, LatticeConfig()).count()
+    assert doc_ids(spark.read.parquet(f"{index}_doclen")) == doc_ids(small)

@@ -76,6 +76,35 @@ def test_index_scan_prunes_partitions(spark, index_path):
     assert "PushedFilters" in plan
 
 
+def test_one_postings_file_per_token_bucket(index_path):
+    """The postings are rebalanced by bucket before the write: each
+    token_bucket directory holds exactly one data file, not one per
+    tokenizer task."""
+    from pathlib import Path
+
+    bucket_dirs = sorted(Path(index_path).glob("token_bucket=*"))
+    assert len(bucket_dirs) == 16
+    for d in bucket_dirs:
+        assert len(list(d.glob("*.parquet"))) == 1, d
+
+
+def test_rebuild_is_full_overwrite_under_dynamic_session(spark, tmp_path):
+    """A rebuild replaces every bucket even when the caller's session runs
+    dynamic partition overwrite: no stale postings survive."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    path = str(tmp_path / "tokens")
+    write_token_index(synth_documents(spark, 50, seed=37, mega_every=0), path)
+    small = synth_documents(spark, 2, seed=41, mega_every=0)
+    before = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    try:
+        write_token_index(small, path)
+    finally:
+        spark.conf.set(key, before)
+    got = {r["doc_id"] for r in spark.read.parquet(path).select("doc_id").collect()}
+    assert got == {r["doc_id"] for r in small.select("doc_id").collect()}
+
+
 def test_read_source_dispatch(spark, tmp_path):
     """catalog.read_source: parquet paths read directly; iceberg:/table:
     specs route to the catalog reader (format check only — no Iceberg
