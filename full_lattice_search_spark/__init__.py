@@ -40,3 +40,8 @@ __all__ = [
 ]
 
 __version__ = "0.1.0"
+
+from full_lattice_search_spark import _worker  # noqa: E402
+
+# last, so the freeze covers every import-time object (no-op on the driver)
+_worker.prepare()

@@ -331,10 +331,18 @@ def _empty_hits(explain: bool, with_freq: bool = False) -> pd.DataFrame:
 _DOC_STRIDE = np.int64(1) << 40
 
 
-# Every O(docs) stats frame the composed doc-scan scoring persists is
-# tracked here so callers can scope its lifetime instead of reaching for
+# Every O(docs) stats frame the composed doc-scan scoring persists (and
+# every intermediate frame a query builder persists) is tracked here so
+# callers can scope its lifetime instead of reaching for
 # spark.catalog.clearCache() (which would evict unrelated caches too).
 _COMPOSED_STATS_CACHE: list[DataFrame] = []
+
+
+def track_cached(df: DataFrame) -> DataFrame:
+    """Register a persisted frame with ``composed_cache_scope`` and
+    ``release_composed_caches``; returns it unchanged."""
+    _COMPOSED_STATS_CACHE.append(df)
+    return df
 
 
 @contextlib.contextmanager
@@ -1178,10 +1186,9 @@ def match_lattice(
                     ]
                 ]
 
-        stats = narrow.mapInPandas(
+        stats = track_cached(narrow.mapInPandas(
             run_stats, schema=SPAN_STATS_SCHEMA
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _COMPOSED_STATS_CACHE.append(stats)  # see composed_cache_scope
+        ).persist(StorageLevel.MEMORY_AND_DISK))
         if want_lucene:
             hits = _compose_from_stats_lucene(
                 stats, terms, float(params.boost), prefix=phrase_prefix

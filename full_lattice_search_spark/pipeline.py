@@ -52,10 +52,16 @@ def bucket_col(doc_id_col: str, n_buckets: int) -> F.Column:
 
 
 def completed_buckets(spark: SparkSession, checkpoint_dir: str) -> set[int]:
-    try:
-        ckpt = spark.read.schema(CHECKPOINT_SCHEMA).parquet(checkpoint_dir)
-    except Exception:
+    """Buckets the checkpoint table marks done.  A missing table means a
+    fresh run (nothing done); an existing one is read strictly, so a
+    corrupt checkpoint raises instead of silently re-processing every
+    bucket.  Existence is asked of the path's Hadoop FileSystem, not
+    probed with a failing read (which logs a stack trace per run)."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(checkpoint_dir)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(path):
         return set()
+    ckpt = spark.read.schema(CHECKPOINT_SCHEMA).parquet(checkpoint_dir)
     rows = ckpt.filter(F.col("status") == "done").select("bucket").distinct()
     return {r["bucket"] for r in rows.collect()}
 

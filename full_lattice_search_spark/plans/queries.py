@@ -33,7 +33,10 @@ from full_lattice_search_spark.operators.dedup import (
     simhash_signature,
 )
 from full_lattice_search_spark.operators.extract import extract_spans
-from full_lattice_search_spark.operators.match import match_lattice_tokens
+from full_lattice_search_spark.operators.match import (
+    match_lattice_tokens,
+    track_cached,
+)
 from full_lattice_search_spark.operators.multimodal import media_features
 from full_lattice_search_spark.operators.similarity import (
     brute_force_topk,
@@ -87,21 +90,38 @@ def _tokens(
     )
 
 
-def _contains_probe(slots) -> "F.Column | None":
+def _contains_probe(
+    slots, config: LatticeConfig = LatticeConfig()
+) -> "F.Column | None":
     """Superset candidate predicate over the RAW text for an analyzed
     query (guide §3.2): a document can only produce a span if every slot
     term occurs as a token, and every token is a lowercased whitespace
     word of ``text`` — so ``lower(text) CONTAINS term`` (OR across a
     slot's alternatives, AND across slots) never drops a matching doc.
-    Only valid for the default lowercase analysis chain (same rule as the
-    doc-scan prefilter, operators/match.py); all ``_match`` queries use
-    it.  False positives just flow through the real matcher."""
-    if not slots:
+    That holds only when ``config``'s follow-on chain is at most
+    ``lowercase`` (same rule as the doc-scan prefilter,
+    operators/match.py): a transforming chain (soundex, asciifold) emits
+    tokens the raw text never contains, so no probe (``None``) is
+    returned.  No probe either for an empty slot list or an empty slot
+    (nothing to anchor on); a non-str alternative raises ``TypeError``.
+    False positives just flow through the real matcher."""
+    alts_per_slot = [list(slot) if isinstance(slot, (list, tuple)) else [slot]
+                     for slot in slots]
+    for alts in alts_per_slot:
+        for alt in alts:
+            if not isinstance(alt, str):
+                raise TypeError(
+                    f"query term must be str, got {type(alt).__name__}: {alt!r}"
+                )
+    if (
+        set(config.effective_follow_on()) - {"lowercase"}
+        or not alts_per_slot
+        or not all(alts_per_slot)
+    ):
         return None
     lowered = F.lower(F.col("text"))
     pred = None
-    for slot in slots:
-        alts = [slot] if isinstance(slot, str) else list(slot)
+    for alts in alts_per_slot:
         slot_pred = None
         for alt in alts:
             c = lowered.contains(alt.lower())
@@ -502,6 +522,7 @@ def _match(spark, sf_dir, query, slop, dtype=np.float32, **params):
     # candidate prefilter at the scan: only docs that can possibly match
     # reach the record projection / Python tokenizer.  Skipped for
     # composed scoring (corpus statistics are defined over every doc).
+    cfg = LatticeConfig()
     where = None
     if not params.get("include_span_score"):
         slots = (
@@ -509,7 +530,7 @@ def _match(spark, sf_dir, query, slop, dtype=np.float32, **params):
             if isinstance(query, str) and " " not in query
             else (query.split() if isinstance(query, str) else list(query))
         )
-        where = _contains_probe(slots)
+        where = _contains_probe(slots, cfg)
     toks = _tokens(spark, sf_dir, where=where)
     # ``lattice_tokenize`` emits each document's rows contiguous and
     # position-sorted within one partition, so the matcher's doc_id
@@ -519,7 +540,7 @@ def _match(spark, sf_dir, query, slop, dtype=np.float32, **params):
     return match_lattice_tokens(
         toks,
         query,
-        LatticeConfig(),
+        cfg,
         MatchLatticeParams(slop=slop, **params),
         dtype=dtype,
         assume_doc_clustered=True,
@@ -978,7 +999,7 @@ def q_match_span_score(spark, sf_dir):
     frame is an intra-query intermediate, recomputed from parquet on
     every invocation."""
     toks = _tokens(spark, sf_dir, where=_contains_probe(["table"]))
-    cand = (
+    cand = track_cached(
         toks.filter(F.col("token").isin(["table"]))
         .select("doc_id", "token", "abs_pos", "score", "seq")
         .persist()
@@ -1520,7 +1541,7 @@ def q_bm25(spark, sf_dir):
     # feeding both the tf and df aggregations: one tokenize execution
     # instead of three (see q_match_span_score)
     toks = _tokens(spark, sf_dir, where=_contains_probe([["table", "stream"]]))
-    cand = (
+    cand = track_cached(
         toks.filter(F.col("token").isin(["table", "stream"]))
         .select("doc_id", "token")
         .persist()
@@ -1693,7 +1714,7 @@ def q_minhash_lsh_pairs(spark, sf_dir):
     docs = _docs_with_near_dups(spark, sf_dir)
     # the signature table is reused by banding and by both jaccard joins —
     # at scale it would be a materialized table; here: persist once
-    sigs = minhash_signature(docs).persist()
+    sigs = track_cached(minhash_signature(docs).persist())
     pairs = lsh_candidate_pairs(sigs)
     return minhash_jaccard(sigs, pairs).filter(F.col("jaccard_est") >= 0.5)
 
@@ -1781,7 +1802,7 @@ def q_dedup_groups(spark, sf_dir):
     from full_lattice_search_spark.operators.dedup import near_dup_groups
 
     docs = _docs_with_dup_chain(spark, sf_dir)
-    sigs = minhash_signature(docs).persist()
+    sigs = track_cached(minhash_signature(docs).persist())
     pairs = minhash_jaccard(sigs, lsh_candidate_pairs(sigs)).filter(
         F.col("jaccard_est") >= 0.5
     )

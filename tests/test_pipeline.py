@@ -206,3 +206,33 @@ def test_run_extraction_leaves_overwrite_mode_static(spark, tmp_path):
     assert doc_ids(postings) == doc_ids(small)
     assert postings.count() == lattice_tokenize(small, LatticeConfig()).count()
     assert doc_ids(spark.read.parquet(f"{index}_doclen")) == doc_ids(small)
+
+
+def test_completed_buckets_missing_dir_is_empty(spark, tmp_path, monkeypatch):
+    # a fresh run asks the filesystem; it never probes with a failing read
+    from pyspark.sql.readwriter import DataFrameReader
+
+    reads = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        reads.append(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    assert completed_buckets(spark, str(tmp_path / "nothing-here")) == set()
+    assert reads == []
+
+
+def test_completed_buckets_empty_dir_is_empty(spark, tmp_path):
+    assert completed_buckets(spark, str(tmp_path)) == set()
+
+
+def test_completed_buckets_corrupt_checkpoint_raises(spark, dirs):
+    # a corrupt checkpoint must not read as "nothing done": that would
+    # silently re-process every bucket
+    _, ckpt_dir = dirs
+    Path(ckpt_dir).mkdir()
+    (Path(ckpt_dir) / "part-00000.snappy.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="(?i)parquet|corrupt|footer|magic"):
+        completed_buckets(spark, ckpt_dir)
