@@ -56,24 +56,19 @@ def minhash_value_exprs(
     ]
 
 
-def normalized_text(text_col: str = "text") -> Column:
-    return F.lower(F.trim(F.col(text_col)))
-
-
 def exact_dup_groups(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Exact dedup: hash-groupBy on md5(normalized text).  Returns one row
     per duplicate group (n_docs >= 2) with the representative (min id)."""
-    h = F.md5(normalized_text(text_col)).alias("text_hash")
     return (
-        docs.select(F.col(id_col).cast("long").alias("doc_id"), h)
-        .groupBy("text_hash")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min("doc_id").alias("keep_id"),
+        docs.selectExpr(
+            f"CAST({id_col} AS BIGINT) AS doc_id",
+            f"md5(lower(trim({text_col}))) AS text_hash",
         )
-        .filter(F.col("n_docs") >= 2)
+        .groupBy("text_hash")
+        .agg(F.expr("count(1) AS n_docs"), F.expr("min(doc_id) AS keep_id"))
+        .filter("n_docs >= 2")
     )
 
 
@@ -110,39 +105,43 @@ def minhash_signature(
 ) -> DataFrame:
     """(doc_id, mh: array<bigint>[n_hashes]) minhash signature.
 
-    Relational formulation: explode shingles → one md5 per shingle → two
-    48-bit ints (Horner over the hex halves) → n_hashes Kirsch-Mitzenmacher
-    values → integer min aggregates.  Everything runs in whole-stage
-    codegen with map-side partial min — the shuffle carries n_hashes longs
-    per doc regardless of document size.  (Do NOT write this as nested
-    higher-order functions: HOF lambdas are interpreted per element.)"""
-    id_expr = (
-        F.col(id_col).cast(id_cast) if id_cast else F.col(id_col)
-    ).alias("doc_id")
-    sh_rows = docs.select(
-        id_expr,
-        tokens_col(text_col).alias("_toks"),
-    ).select("doc_id", F.explode(shingles_from_tokens("_toks")).alias("sh"))
+    Relational formulation: posexplode the shingle start tokens → one md5
+    per shingle → two 48-bit ints (``conv`` over the hex halves) →
+    n_hashes Kirsch-Mitzenmacher values → integer min aggregates.  The
+    shingle at start ``i`` is ``concat_ws(' ', toks[i], ..., toks[i+k-1])``
+    with ``k = SHINGLE_K`` (no interpreted HOF); a document shorter than
+    ``k`` tokens contributes its whole text as one shingle.  Duplicate
+    shingles need no ``array_distinct``: ``min`` ignores them.  Everything
+    runs in whole-stage codegen with map-side partial min — the shuffle
+    carries n_hashes longs per doc regardless of document size.
+
+    Every projection is SQL text: one py4j call each, where Column-API
+    calls would cost one round-trip chain per hash (see CLAUDE.md)."""
+    k = SHINGLE_K
+    doc_id = f"CAST({id_col} AS {id_cast})" if id_cast else id_col
+    long_doc = f"size(toks) >= {k}"
+    window = ", ".join(["t0"] + [f"toks[i + {j}]" for j in range(1, k)])
+    shingles = docs.selectExpr(
+        f"{doc_id} AS doc_id", f"split(lower({text_col}), ' ') AS toks"
+    ).selectExpr(
+        "doc_id",
+        "toks",
+        f"posexplode(IF({long_doc}, slice(toks, 1, size(toks) - {k - 1}),"
+        " array(concat_ws(' ', toks)))) AS (i, t0)",
+    )
     # conv() parses each 12-hex-char half in one codegen call; the DuckDB
     # oracle keeps the Horner expansion (hex_to_int_expr) — same exact
-    # 48-bit integers, different engine idiom.
-    hashed = sh_rows.select(
-        "doc_id", F.md5("sh").alias("h")
-    ).select(
+    # 48-bit integers, different engine idiom.  md5 sits in its own
+    # projection so the two halves share one digest.
+    hashed = shingles.selectExpr(
+        "doc_id", f"md5(IF({long_doc}, concat_ws(' ', {window}), t0)) AS h"
+    ).selectExpr(
         "doc_id",
-        F.conv(F.substring("h", 1, 12), 16, 10).cast("bigint").alias("h1"),
-        F.conv(F.substring("h", 13, 12), 16, 10).cast("bigint").alias("h2"),
+        "CAST(conv(substr(h, 1, 12), 16, 10) AS BIGINT) AS h1",
+        "CAST(conv(substr(h, 13, 12), 16, 10) AS BIGINT) AS h2",
     )
-    vals = minhash_value_exprs("h1", "h2", n_hashes)
-    mins = [F.min(F.expr(v)).alias(f"m{j}") for j, v in enumerate(vals)]
-    return (
-        hashed.groupBy("doc_id")
-        .agg(*mins)
-        .select(
-            "doc_id",
-            F.array(*[F.col(f"m{j}") for j in range(n_hashes)]).alias("mh"),
-        )
-    )
+    mins = ", ".join(f"min({v})" for v in minhash_value_exprs("h1", "h2", n_hashes))
+    return hashed.groupBy("doc_id").agg(F.expr(f"array({mins}) AS mh"))
 
 
 def lsh_candidate_pairs(
@@ -169,41 +168,33 @@ def lsh_candidate_pairs(
     uninformative (near-identical boilerplate is better handled by exact
     dedup upstream).  ``None`` (default) keeps every bucket — exact LSH
     semantics, what the oracles check."""
-    n_bands = n_hashes // band_rows
-    bands = F.array(
-        *[
-            F.struct(
-                *[
-                    F.col("mh")[b * band_rows + r].alias(f"k{r}")
-                    for r in range(band_rows)
-                ]
-            )
-            for b in range(n_bands)
-        ]
+    bands = ", ".join(
+        "named_struct("
+        + ", ".join(f"'k{r}', mh[{b * band_rows + r}]" for r in range(band_rows))
+        + ")"
+        for b in range(n_hashes // band_rows)
     )
-    banded = signatures.select(
-        "doc_id", F.posexplode(bands).alias("band_idx", "band_key")
+    banded = signatures.selectExpr(
+        "doc_id", f"posexplode(array({bands})) AS (band_idx, band_key)"
     )
     if max_band_bucket is not None:
         small = (
             banded.groupBy("band_idx", "band_key")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") <= max_band_bucket)
-            .drop("_n")
+            .count()
+            .filter(f"`count` <= {int(max_band_bucket)}")
+            .drop("count")
         )
         banded = banded.join(small, ["band_idx", "band_key"], "left_semi")
-    a = banded.alias("a")
-    b = banded.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        banded.alias("a")
+        .join(
+            banded.alias("b"),
+            F.expr(
+                "a.band_idx = b.band_idx AND a.band_key = b.band_key"
+                " AND a.doc_id < b.doc_id"
+            ),
         )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
+        .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b")
         .distinct()
     )
 
@@ -214,19 +205,17 @@ def minhash_jaccard(
     """Estimated jaccard for candidate pairs = fraction of equal minhashes.
     Both joins broadcast-able when the pair list is small; otherwise they
     shuffle on doc_id — the signature table is a narrow projection."""
-    sa = signatures.select(
-        F.col("doc_id").alias("doc_a"), F.col("mh").alias("mh_a")
-    )
-    sb = signatures.select(
-        F.col("doc_id").alias("doc_b"), F.col("mh").alias("mh_b")
-    )
-    eq = F.expr(
-        f"size(filter(zip_with(mh_a, mh_b, (x, y) -> x = y), b -> b)) / {n_hashes}"
-    )
+    sa = signatures.selectExpr("doc_id AS doc_a", "mh AS mh_a")
+    sb = signatures.selectExpr("doc_id AS doc_b", "mh AS mh_b")
     return (
         pairs.join(sa, "doc_a")
         .join(sb, "doc_b")
-        .select("doc_a", "doc_b", F.round(eq, 4).alias("jaccard_est"))
+        .selectExpr(
+            "doc_a",
+            "doc_b",
+            "round(size(filter(zip_with(mh_a, mh_b, (x, y) -> x = y), b -> b))"
+            f" / {n_hashes}, 4) AS jaccard_est",
+        )
     )
 
 
@@ -236,52 +225,40 @@ def simhash_signature(
     text_col: str = "text",
     n_bits: int = 32,
 ) -> DataFrame:
-    """32-bit SimHash as a '0'/'1' string.  Bit i of a token's hash is the
-    parity of hex digit i of md5(token); the signature bit is the sign of
-    the (+1/−1) sum over all tokens (multiplicity counted).
+    """``n_bits``-bit SimHash (at most 32) as a '0'/'1' string.  Bit i of
+    a token's hash is the parity of hex digit i of md5(token); the
+    signature bit is the sign of the (+1/−1) sum over all tokens
+    (multiplicity counted).
 
-    Plan: explode tokens → ONE md5 per token → two translate() calls map
-    the 32 hex digits to a '0'/'1' parity string → n_bits substr/cast
-    columns → one groupBy with codegen sum aggregates.  (The obvious
-    nested-HOF formulation re-tokenizes and re-hashes every token once per
-    bit — 32× the work, interpreted; see CLAUDE.md.)  The shuffle carries
-    n_bits ints + a count per doc regardless of document size, with
-    map-side partial aggregation."""
-    toks = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.explode(tokens_col(text_col)).alias("tok"),
-    )
-    # parity string: hex digit -> '1' if odd, '0' if even — md5 ONCE per
-    # token, materialized in its own projection (inlining the chain into
-    # the 32 substr columns would re-hash per bit; CollapseProject keeps a
-    # multiply-referenced non-cheap expression in its own Project)
-    par = toks.select(
-        "doc_id",
-        F.translate(
-            F.translate(F.md5("tok"), "13579bdf", "11111111"),
-            "02468ace",
-            "00000000",
-        ).alias("par"),
-    )
-    ones = par.select(
+    Plan: explode tokens → ONE md5 per token → its first hex digits as
+    8-digit BIGINT words (``conv``) → one groupBy whose aggregates fold
+    bit i as ``sum(shiftright(w[i/8], 4*(7 - i%8)) & 1)`` in codegen.
+    (The obvious nested-HOF formulation re-tokenizes and re-hashes every
+    token once per bit — 32× the work, interpreted; see CLAUDE.md.)  The
+    shuffle carries n_bits longs + a count per doc regardless of document
+    size, with map-side partial aggregation.  Every projection is SQL
+    text, one py4j call each."""
+    if not 1 <= n_bits <= 32:
+        raise ValueError(f"n_bits must be in [1, 32], got {n_bits}")
+    # md5 ONCE per token, in its own projection: the words reference it
+    # several times, so CollapseProject does not inline it into each
+    words = docs.selectExpr(
+        f"CAST({id_col} AS BIGINT) AS doc_id",
+        f"explode(split(lower({text_col}), ' ')) AS tok",
+    ).selectExpr("doc_id", "md5(tok) AS h").selectExpr(
         "doc_id",
         *[
-            F.substring("par", i + 1, 1).cast("int").alias(f"b{i}")
-            for i in range(n_bits)
+            f"CAST(conv(substr(h, {8 * w + 1}, 8), 16, 10) AS BIGINT) AS w{w}"
+            for w in range((n_bits + 7) // 8)
         ],
     )
-    agg = ones.groupBy("doc_id").agg(
-        F.count("*").alias("n"),
-        *[F.sum(f"b{i}").alias(f"s{i}") for i in range(n_bits)],
-    )
     # sum of (+1/-1) = 2*ones - n; bit = '1' iff positive
-    sig = F.concat(
-        *[
-            F.when(2 * F.col(f"s{i}") - F.col("n") > 0, "1").otherwise("0")
-            for i in range(n_bits)
-        ]
+    bits = ", ".join(
+        f"IF(2 * sum(shiftright(w{i // 8}, {4 * (7 - i % 8)}) & 1) > count(1),"
+        " '1', '0')"
+        for i in range(n_bits)
     )
-    return agg.select("doc_id", sig.alias("simhash"))
+    return words.groupBy("doc_id").agg(F.expr(f"concat({bits}) AS simhash"))
 
 
 def ngram_jaccard_pairs(

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from full_lattice_search_spark.sources.catalog import read_parquet
+
 N_TOKENS = 24
 
 
@@ -58,36 +60,48 @@ def scan_parallel(
     no-op — the guard is derived from the data, not tuned to local[32].
 
     ``size_path``: optional filesystem path of the scanned parquet.  When
-    given, the under-provisioned check is pure local arithmetic — Spark's
-    split packing yields >= parallelism splits whenever the input exceeds
-    openCostInBytes (4 MB) x parallelism, so anything smaller gets the
-    guard.  Without it the check falls back to ``df.rdd`` partition
-    counting, which costs a planning round-trip per query construction
-    (~50-70 ms of py4j on this host — measurable inside a timed bench
-    lambda)."""
+    given, the check is local file metadata (``_scan_under_provisioned``).
+    Without it the check falls back to ``df.rdd`` partition counting,
+    which costs a planning round-trip per query construction (~50-70 ms of
+    py4j on this host — measurable inside a timed bench lambda)."""
+    n = spark.sparkContext.defaultParallelism
+    under = (
+        _scan_under_provisioned(size_path, n) if size_path is not None else None
+    )
+    if under is None:
+        under = df.rdd.getNumPartitions() < n
+    return df.repartition(n) if under else df
+
+
+def _scan_under_provisioned(path: str, n: int) -> bool | None:
+    """Whether a scan of the parquet file or directory at ``path`` reads
+    its rows in fewer than ``n`` tasks; ``None`` when the files cannot be
+    inspected.
+
+    Spark's split packing yields >= ``n`` splits whenever the input
+    exceeds openCostInBytes (4 MB) x ``n``, so anything smaller is
+    under-provisioned.  A larger input may still be: a split reads only
+    the row groups whose midpoint it holds, so the tasks that read rows
+    are at most the row-group count — min(splits, row groups) decides."""
     import os
 
-    n = spark.sparkContext.defaultParallelism
-    if size_path is not None:
-        try:
-            size = (
-                os.path.getsize(size_path)
-                if os.path.isfile(size_path)
-                else sum(
-                    os.path.getsize(os.path.join(size_path, f))
-                    for f in os.listdir(size_path)
-                    if not f.startswith((".", "_"))
-                )
-            )
-        except OSError:
-            size = None
-        if size is not None:
-            if size < (4 << 20) * n:
-                return df.repartition(n)
-            return df
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n)
-    return df
+    import pyarrow.parquet as pq
+
+    try:
+        files = (
+            [path]
+            if os.path.isfile(path)
+            else [
+                os.path.join(path, f)
+                for f in os.listdir(path)
+                if not f.startswith((".", "_"))
+            ]
+        )
+        if sum(os.path.getsize(f) for f in files) < (4 << 20) * n:
+            return True
+        return sum(pq.read_metadata(f).num_row_groups for f in files) < n
+    except (OSError, ValueError):  # pyarrow's ArrowInvalid is a ValueError
+        return None
 
 
 def lattice_docs(
@@ -107,7 +121,7 @@ def lattice_docs(
     them).  Callers must pass a superset predicate (e.g. a lowercase
     substring probe per query term) so results are unchanged."""
     path = f"{sf_dir}/documents.parquet"
-    docs = spark.read.parquet(path)
+    docs = read_parquet(spark, path)
     if where is not None:
         docs = docs.filter(where)
     docs = scan_parallel(docs, spark, size_path=path)

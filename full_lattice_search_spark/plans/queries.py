@@ -47,6 +47,7 @@ from full_lattice_search_spark.plans.lattice_view import (
     ORACLE_TOKENS_CTE,
     lattice_docs,
 )
+from full_lattice_search_spark.sources.catalog import read_parquet
 
 # ---------------------------------------------------------------------------
 # shared fragments
@@ -69,7 +70,7 @@ abs_tokens AS (
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _par(
@@ -133,8 +134,8 @@ def _contains_probe(
 # Exact-duplicate augmentation: clone every 10th document.
 def _docs_with_exact_dups(spark, sf_dir):
     docs = _read(spark, sf_dir, "documents")
-    copies = docs.filter(F.col("doc_id") % 10 == 0).withColumn(
-        "doc_id", F.col("doc_id") + 1000000
+    copies = docs.filter("doc_id % 10 = 0").withColumn(
+        "doc_id", F.expr("doc_id + 1000000")
     )
     return docs.unionByName(copies)
 
@@ -152,15 +153,13 @@ aug AS (
 # dropped.
 def _docs_with_near_dups(spark, sf_dir):
     docs = _read(spark, sf_dir, "documents")
-    trunc = F.expr(
-        "concat_ws(' ', slice(split(text, ' '), 1,"
-        " greatest(size(split(text, ' ')) - 3, 1)))"
-    )
-    copies = (
-        docs.filter(F.col("doc_id") % 10 == 0)
-        .withColumn("doc_id", F.col("doc_id") + 1000000)
-        .withColumn("text", trunc)
-    )
+    copies = docs.filter("doc_id % 10 = 0").withColumns({
+        "doc_id": F.expr("doc_id + 1000000"),
+        "text": F.expr(
+            "concat_ws(' ', slice(split(text, ' '), 1,"
+            " greatest(size(split(text, ' ')) - 3, 1)))"
+        ),
+    })
     return docs.unionByName(copies)
 
 
@@ -1711,12 +1710,16 @@ FROM mh
 
 
 def q_minhash_lsh_pairs(spark, sf_dir):
-    docs = _docs_with_near_dups(spark, sf_dir)
+    docs = _par(
+        _docs_with_near_dups(spark, sf_dir),
+        spark,
+        size_path=f"{sf_dir}/documents.parquet",
+    )
     # the signature table is reused by banding and by both jaccard joins —
     # at scale it would be a materialized table; here: persist once
     sigs = track_cached(minhash_signature(docs).persist())
     pairs = lsh_candidate_pairs(sigs)
-    return minhash_jaccard(sigs, pairs).filter(F.col("jaccard_est") >= 0.5)
+    return minhash_jaccard(sigs, pairs).filter("jaccard_est >= 0.5d")
 
 
 SQL_MINHASH_LSH_PAIRS = f"""
@@ -1857,7 +1860,12 @@ FROM reach GROUP BY src
 
 
 def q_simhash(spark, sf_dir):
-    return simhash_signature(_read(spark, sf_dir, "documents"))
+    docs = _par(
+        _read(spark, sf_dir, "documents"),
+        spark,
+        size_path=f"{sf_dir}/documents.parquet",
+    )
+    return simhash_signature(docs)
 
 
 SQL_SIMHASH = """

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -20,6 +22,27 @@ def spark():
     spark.sparkContext.setLogLevel("WARN")
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> ``(fn(), n)``: n = the Spark jobs ``fn``
+    launched, counted with a job group and the status tracker (after the
+    listener bus has delivered every event)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count jobs")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"

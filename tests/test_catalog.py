@@ -1,5 +1,5 @@
 """Source/sink dispatch (sources/catalog.py): parquet, catalog tables, and
-the Iceberg spelling.
+the Iceberg spelling; the schema-caching parquet reader.
 
 The sandbox has no Iceberg runtime jar, so the `iceberg:` spelling is
 exercised to the dispatch boundary and the failure mode is pinned; the
@@ -8,9 +8,14 @@ behavior the Iceberg `overwritePartitions` path maps onto) is asserted
 for real.
 """
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from full_lattice_search_spark.sources.catalog import (
+    read_parquet,
     read_source,
     write_bucketed,
 )
@@ -74,3 +79,58 @@ def test_write_bucketed_dynamic_partition_overwrite(spark, tmp_path):
     for b in range(4):
         files = (tmp_path / "bucketed" / f"bucket={b}").glob("*.parquet")
         assert len(list(files)) == 1
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_read_parquet_reuses_the_inferred_schema(spark, tmp_path, count_jobs):
+    """Schema inference is a Spark job; a second read of the unchanged
+    file passes the cached schema and launches none."""
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [3, 1, 2], "b": ["x", None, "z"]}), path)
+    first, jobs_first = count_jobs(lambda: read_parquet(spark, path))
+    again, jobs_again = count_jobs(lambda: read_parquet(spark, path))
+    assert jobs_first >= 1  # the count sees the inference job
+    assert jobs_again == 0
+    plain = spark.read.parquet(path)
+    assert again.schema == first.schema == plain.schema
+    assert _rows(again) == _rows(first) == _rows(plain)
+    # read_source's parquet spelling goes through the same cache
+    _, jobs_source = count_jobs(lambda: read_source(spark, path))
+    assert jobs_source == 0
+
+
+def test_read_parquet_reinfers_a_rewritten_file(spark, tmp_path, count_jobs):
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert read_parquet(spark, path).columns == ["a"]
+    st = os.stat(path)
+    pq.write_table(pa.table({"a": [1, 2], "c": [0.5, 1.5]}), path)
+    # even with the old mtime put back, size and change time differ
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+    df, jobs = count_jobs(lambda: read_parquet(spark, path))
+    assert jobs >= 1
+    assert df.columns == ["a", "c"]
+    assert _rows(df) == _rows(spark.read.parquet(path))
+
+
+@pytest.mark.parametrize("spelling", ["directory", "file_uri"])
+def test_read_parquet_bypasses_cache_for_dirs_and_uris(
+    spark, tmp_path, count_jobs, spelling
+):
+    """A directory's file set (and anything behind a URI) can change
+    without the path's own stat changing: every read infers."""
+    if spelling == "directory":
+        path = str(tmp_path / "dir")
+        spark.range(5).write.parquet(path)
+    else:
+        local = tmp_path / "t.parquet"
+        pq.write_table(pa.table({"id": list(range(5))}), str(local))
+        path = local.as_uri()
+        assert path.startswith("file:")
+    read_parquet(spark, path)
+    df, jobs = count_jobs(lambda: read_parquet(spark, path))
+    assert jobs >= 1
+    assert _rows(df) == _rows(spark.read.parquet(path))

@@ -1,8 +1,100 @@
-"""Dedup operator guards (LSH band-bucket cap)."""
+"""Dedup operators: the SimHash/MinHash kernels against a pure-Python
+md5 reference, the LSH band-bucket cap, connected components."""
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
+
+from full_lattice_search_spark.operators.dedup import (
+    DEFAULT_N_HASHES,
+    MINHASH_MOD,
+    SHINGLE_K,
+    minhash_signature,
+    simhash_signature,
+)
+
+# edge cases the kernels must get exactly right (doc_id, text)
+KERNEL_DOCS = [
+    (1, None),                         # null text
+    (2, ""),                           # empty text: one empty token
+    (3, "solo"),                       # 1 token
+    (4, "two words"),                  # 2 tokens: shorter than a shingle
+    (5, "a b c"),                      # exactly one shingle
+    (6, "the the the the the"),        # repeated token, duplicate shingles
+    (7, "a b c a b c a b c"),          # duplicate shingles
+    (8, "run  of   spaces "),          # empty tokens between/after spaces
+    (9, " Leading AND Trailing "),     # case folding + edge empties
+    (10, "héllo wörld 日本語 naïve café"),  # non-ASCII tokens
+    (11, "Héllo wörld 日本語 naïve café"),  # same after lower()
+]
+
+
+def _md5(s: str) -> str:
+    return hashlib.md5(s.encode("utf-8")).hexdigest()
+
+
+def _tokens(text: str) -> list[str]:
+    return text.lower().split(" ")
+
+
+def ref_simhash(text: str, n_bits: int = 32) -> str:
+    """Bit i = sign of the +1/-1 sum over tokens of hex digit i's parity."""
+    toks = _tokens(text)
+    ones = [0] * n_bits
+    for tok in toks:
+        h = _md5(tok)
+        for i in range(n_bits):
+            ones[i] += int(h[i], 16) & 1
+    return "".join("1" if 2 * o > len(toks) else "0" for o in ones)
+
+
+def ref_minhash(text: str | None, n_hashes: int = DEFAULT_N_HASHES) -> list[int]:
+    """Min over distinct word k-shingles of the Kirsch-Mitzenmacher family
+    on md5's two 48-bit halves; a text shorter than k tokens (or null) is
+    one shingle of its whole (space-joined) token list."""
+    toks = _tokens(text) if text is not None else []
+    k = SHINGLE_K
+    if len(toks) >= k:
+        shingles = {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+    else:
+        shingles = {" ".join(toks)}
+    halves = [(int(h[:12], 16), int(h[12:24], 16)) for h in map(_md5, shingles)]
+    return [
+        min((h1 * (2 * j + 1) + h2 * (j + 7)) % MINHASH_MOD for h1, h2 in halves)
+        for j in range(n_hashes)
+    ]
+
+
+@pytest.fixture(scope="module")
+def kernel_docs(spark):
+    return spark.createDataFrame(KERNEL_DOCS, "doc_id long, text string")
+
+
+@pytest.mark.parametrize("n_bits", [32, 13])
+def test_simhash_matches_md5_reference(kernel_docs, n_bits):
+    got = {r["doc_id"]: r["simhash"]
+           for r in simhash_signature(kernel_docs, n_bits=n_bits).collect()}
+    # a null text has no tokens, so no signature row
+    want = {i: ref_simhash(t, n_bits) for i, t in KERNEL_DOCS if t is not None}
+    assert got == want
+    assert got[10] == got[11]
+
+
+def test_minhash_matches_md5_reference(kernel_docs):
+    got = {r["doc_id"]: r["mh"] for r in minhash_signature(kernel_docs).collect()}
+    assert got == {i: ref_minhash(t) for i, t in KERNEL_DOCS}
+    assert got[10] == got[11]
+
+
+def test_minhash_keeps_ids_uncast(spark):
+    docs = spark.createDataFrame(
+        [(f"doc-{i}", t) for i, t in KERNEL_DOCS], "doc_id string, text string"
+    )
+    got = {r["doc_id"]: r["mh"]
+           for r in minhash_signature(docs, id_cast=None).collect()}
+    assert got == {f"doc-{i}": ref_minhash(t) for i, t in KERNEL_DOCS}
 
 
 def test_lsh_band_bucket_cap(spark):

@@ -1,8 +1,12 @@
 """Query-builder hygiene (plans/queries.py): the raw-text candidate probe
-refuses what it cannot prefilter soundly, and every frame a builder
-persists is released by the composed-cache scope."""
+refuses what it cannot prefilter soundly, every frame a builder persists
+is released by the composed-cache scope, building a query over an
+already-read table launches no Spark job, and the scan-parallelism guard
+decides from the file's splits and row groups."""
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pyarrow as pa
@@ -14,6 +18,7 @@ from full_lattice_search_spark import (
     composed_cache_scope,
     release_composed_caches,
 )
+from full_lattice_search_spark.plans.lattice_view import scan_parallel
 from full_lattice_search_spark.plans.queries import QUERIES, _contains_probe
 
 TEXTS = ["Hash join then MERGE", "hash only", "merge hash", "fast fox",
@@ -103,3 +108,43 @@ def test_builder_caches_released_by_release(spark, sf_dir):
         QUERIES[name](spark, sf_dir).collect()
     assert release_composed_caches() == len(PERSISTING)
     assert cache_empty(spark)
+
+
+@pytest.mark.parametrize("name", ["dedup_exact", "simhash", "minhash_lsh_pairs"])
+def test_planning_over_a_read_table_launches_no_job(
+    spark, sf_dir, count_jobs, name
+):
+    """Once a table's schema is known, building a dedup entry is pure
+    planning: no schema-inference job, no partition-count job."""
+    QUERIES[name](spark, sf_dir)
+    _, jobs = count_jobs(lambda: QUERIES[name](spark, sf_dir))
+    assert jobs == 0
+    spark.catalog.clearCache()
+
+
+def _big_parquet(path, cores, row_groups):
+    """An incompressible table of ``row_groups`` row groups, larger than
+    openCostInBytes (4 MB) x ``cores``, so split packing alone would give
+    every core a split."""
+    n = 16 * cores  # 300 kB rows: 4.8 MB a core
+    blob = pa.array([np.random.default_rng(i).bytes(300_000) for i in range(n)],
+                    pa.binary())
+    pq.write_table(pa.table({"id": pa.array(range(n), pa.int64()), "b": blob}),
+                   str(path), row_group_size=n // row_groups, compression="none")
+    assert os.path.getsize(path) > (4 << 20) * cores
+    assert pq.read_metadata(str(path)).num_row_groups == row_groups
+    return str(path)
+
+
+@pytest.mark.parametrize("per_core,fires", [(False, True), (True, False)])
+def test_scan_guard_counts_row_groups(spark, tmp_path, per_core, fires):
+    """A split reads only the row groups whose midpoint it holds: a big
+    file with one row group still scans in one task (guard fires), one
+    with a row group per core does not need the guard."""
+    cores = spark.sparkContext.defaultParallelism
+    path = _big_parquet(tmp_path / "big.parquet", cores, cores if per_core else 1)
+    df = spark.read.parquet(path)
+    guarded = scan_parallel(df, spark, size_path=path)
+    assert (guarded is not df) == fires
+    if fires:
+        assert guarded.rdd.getNumPartitions() == cores
