@@ -48,7 +48,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from full_lattice_search_spark.config import LatticeConfig
@@ -395,13 +395,13 @@ def _extract_batch_arrow(
     )
 
 
-def _narrow_cols(doc_id_col: str, spans_col: str) -> list[Column]:
+def _narrow_sql(doc_id_col: str, spans_col: str) -> list[str]:
     return [
-        F.col(doc_id_col).cast("string").alias("doc_id"),
-        F.expr(f"transform({spans_col}, s -> s.kind)").alias("kinds"),
-        F.expr(f"transform({spans_col}, s -> s.text)").alias("texts"),
-        F.expr(f"transform({spans_col}, s -> s.media_ref)").alias("medias"),
-        F.expr(f"transform({spans_col}, s -> s.offset)").alias("offsets"),
+        f"CAST({doc_id_col} AS STRING) AS doc_id",
+        f"transform({spans_col}, s -> s.kind) AS kinds",
+        f"transform({spans_col}, s -> s.text) AS texts",
+        f"transform({spans_col}, s -> s.media_ref) AS medias",
+        f"transform({spans_col}, s -> s.offset) AS offsets",
     ]
 
 
@@ -415,7 +415,7 @@ def extract_spans(
     """Direct path: whole-document extraction in one mapInArrow stage.
     Zero shuffles; scales linearly with input splits."""
     config = config or LatticeConfig()
-    narrow = docs.select(*_narrow_cols(doc_id_col, spans_col))
+    narrow = docs.selectExpr(*_narrow_sql(doc_id_col, spans_col))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
@@ -445,16 +445,17 @@ def extract_spans_salted(
     spark = docs.sparkSession
     n_part = salt_partitions or spark.sparkContext.defaultParallelism
 
-    flat = docs.select(
-        F.col(doc_id_col).cast("string").alias("doc_id"),
-        F.explode_outer(spans_col).alias("s"),
-    ).select(
+    # SQL text throughout: every Column-API call costs ~14 py4j round trips
+    flat = docs.selectExpr(
+        f"CAST({doc_id_col} AS STRING) AS doc_id",
+        f"explode_outer({spans_col}) AS s",
+    ).selectExpr(
         "doc_id",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
+        "s.kind AS kind",
+        "s.text AS text",
+        "s.media_ref AS media_ref",
         # the no-spans placeholder needs an offset for the int64 cast below
-        F.coalesce(F.col("s.offset"), F.lit(-1)).alias("offset"),
+        "coalesce(s.offset, -1) AS offset",
     )
     # the salt: spread a single doc's spans across partitions
     flat = flat.repartition(n_part, "doc_id", "offset")
@@ -482,29 +483,26 @@ def extract_spans_salted(
 
     extracted = flat.mapInPandas(run, schema=span_schema)
 
-    kept = F.when(
-        F.col("keep"), F.struct("offset", "kind", "text", "media_ref")
-    )
     merged = (
         extracted.groupBy("doc_id")
         # collect_list skips the nulls of dropped spans: a doc whose spans
         # were all dropped still gets its row, with an empty list
-        .agg(F.array_sort(F.collect_list(kept)).alias("ordered"))
-        .select(
+        .agg(F.expr(
+            "array_sort(collect_list(CASE WHEN keep THEN named_struct("
+            "'offset', offset, 'kind', kind, 'text', text, "
+            "'media_ref', media_ref) END)) AS ordered"
+        ))
+        .selectExpr(
             "doc_id",
-            F.expr(
-                "transform(ordered, (s, i) -> "
-                "struct(s.kind as kind, s.text as text, "
-                "s.media_ref as media_ref, cast(i as int) as offset))"
-            ).alias("spans"),
+            "transform(ordered, (s, i) -> "
+            "struct(s.kind as kind, s.text as text, "
+            "s.media_ref as media_ref, cast(i as int) as offset)) AS spans",
         )
     )
-    return merged.select(
+    return merged.selectExpr(
         "doc_id",
         "spans",
-        F.size("spans").cast("int").alias("n_spans"),
-        F.expr(
-            "aggregate(spans, 0L, (acc, s) -> "
-            "acc + coalesce(length(s.text), 0L))"
-        ).alias("n_text_chars"),
+        "CAST(size(spans) AS INT) AS n_spans",
+        "aggregate(spans, 0L, (acc, s) -> "
+        "acc + coalesce(length(s.text), 0L)) AS n_text_chars",
     )

@@ -47,8 +47,9 @@ from full_lattice_search_spark.sources.catalog import write_bucketed
 DEFAULT_SALT_THRESHOLD = 64
 
 
-def bucket_col(doc_id_col: str, n_buckets: int) -> F.Column:
-    return F.pmod(F.xxhash64(F.col(doc_id_col)), F.lit(n_buckets)).cast("int")
+def bucket_sql(doc_id_col: str, n_buckets: int) -> str:
+    """The bucket of a row as SQL text: ``pmod`` lies in ``[0, n_buckets)``."""
+    return f"CAST(pmod(xxhash64({doc_id_col}), {n_buckets}) AS INT)"
 
 
 def completed_buckets(spark: SparkSession, checkpoint_dir: str) -> set[int]:
@@ -84,49 +85,60 @@ def _process_bucket_group(
     leaves its buckets "not done" (re-processed and dynamically overwritten
     on resume) while every previously committed group stays done."""
     t0 = time.time()
-    bucketed = docs.withColumn(
-        "_bucket", bucket_col(doc_id_col, n_buckets)
-    ).filter(F.col("_bucket").isin(group))
-
-    is_mega = F.size(spans_col) > salt_threshold
-    out_small = extract_spans(bucketed.filter(~is_mega), config,
+    # SQL text, not Column-API chains: PySpark wraps each Column call in
+    # ~14 py4j round trips
+    bucketed = docs
+    if len(group) < n_buckets:  # a group of every bucket needs no filter
+        # the hash of the string the output's bucket column hashes: a group
+        # must write only its own buckets, or a later group's dynamic
+        # overwrite of those buckets drops its rows
+        doc_key = f"CAST({doc_id_col} AS STRING)"
+        bucketed = docs.filter(
+            f"{bucket_sql(doc_key, n_buckets)} IN "
+            f"({', '.join(map(str, group))})"
+        )
+    is_mega = f"size({spans_col}) > {salt_threshold}"
+    out_small = extract_spans(bucketed.filter(f"NOT ({is_mega})"), config,
                               doc_id_col=doc_id_col, spans_col=spans_col)
     out_mega = extract_spans_salted(bucketed.filter(is_mega), config,
                                     doc_id_col=doc_id_col,
                                     spans_col=spans_col)
-    out = out_small.unionByName(out_mega).withColumn(
-        "bucket", bucket_col("doc_id", n_buckets)
+    out = out_small.unionByName(out_mega).selectExpr(
+        "*", f"{bucket_sql('doc_id', n_buckets)} AS bucket"
     )
     # Checkpoint metrics ride the WRITE job via the Observation API —
     # per-bucket conditional aggregates computed while the rows stream to
     # parquet, so the just-written output is never re-scanned (at 100 TB a
-    # read-back would double the write path's I/O).  |group| is bounded by
-    # buckets_per_job, so the 3·|group| aggregate columns stay small.
+    # read-back would double the write path's I/O).  The 3·|group|
+    # aggregates are fields of ONE struct metric, parsed from one string.
     from pyspark.sql import Observation
 
     obs = Observation(f"extract-{run_id}-{group[0]}")
-    aggs = []
-    for b in group:
-        cond = (F.col("bucket") == b).cast("long")
-        aggs += [
-            F.sum(cond).alias(f"d{b}"),
-            F.sum(F.col("n_spans") * cond).cast("long").alias(f"s{b}"),
-            F.sum(F.col("n_text_chars") * cond).cast("long").alias(f"c{b}"),
-        ]
-    write_bucketed(out.observe(obs, aggs[0], *aggs[1:]), output_dir)
+    fields = ", ".join(
+        f"sum(IF(bucket = {b}, 1L, 0L)) AS d{b}, "
+        f"sum(IF(bucket = {b}, n_spans, 0L)) AS s{b}, "
+        f"sum(IF(bucket = {b}, n_text_chars, 0L)) AS c{b}"
+        for b in group
+    )
+    write_bucketed(out.observe(obs, F.expr(f"struct({fields}) AS m")),
+                   output_dir)
 
     wall = time.time() - t0
-    got = obs.get  # blocks until the write action has fired the metrics
+    # blocks until the write action fired the metrics.  When Spark proves
+    # the group empty at run time (AQE drops an empty stage's subtree, the
+    # metric with it) the row is empty, which Observation.get cannot convert
+    got = obs.get["m"].asDict() if obs._jo.getRow().length() else {}
     import pandas as pd  # local import keeps module import light
 
     metrics_pdf = pd.DataFrame(
         {
             "bucket": group,
             "run_id": run_id,
-            # empty buckets aggregate to null — they still get marker rows
-            "n_docs": [int(got[f"d{b}"] or 0) for b in group],
-            "n_spans": [int(got[f"s{b}"] or 0) for b in group],
-            "n_text_chars": [int(got[f"c{b}"] or 0) for b in group],
+            # a group with no rows aggregates to null — its buckets still
+            # get marker rows
+            "n_docs": [int(got.get(f"d{b}") or 0) for b in group],
+            "n_spans": [int(got.get(f"s{b}") or 0) for b in group],
+            "n_text_chars": [int(got.get(f"c{b}") or 0) for b in group],
             "status": "done",
             "wall_secs": float(wall),
         }

@@ -708,7 +708,7 @@ SELECT doc_id, score, CAST(rn AS BIGINT) AS rn FROM (
 def q_extract_best_path(spark, sf_dir):
     out = extract_spans(lattice_docs(spark, sf_dir), LatticeConfig())
     return out.select(
-        "doc_id", F.expr("spans[0].text").alias("best_path")
+        "doc_id", F.expr("get(spans, 0).text").alias("best_path")
     )
 
 
@@ -1427,7 +1427,7 @@ def q_extract_boilerplate(spark, sf_dir):
         ).alias("spans"),
     )
     out = extract_spans(docs, LatticeConfig())
-    return out.select("doc_id", F.expr("spans[0].text").alias("content"))
+    return out.select("doc_id", F.expr("get(spans, 0).text").alias("content"))
 
 
 # the stripper must recover exactly the article content: h1 text + body
@@ -1477,7 +1477,7 @@ def q_pdf_extract(spark, sf_dir):
     out = extract_spans(spans, LatticeConfig(), strict=True)
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.expr("spans[0].text").alias("content"),
+        F.expr("get(spans, 0).text").alias("content"),
     )
 
 

@@ -19,6 +19,7 @@ one file — what Iceberg's ``write.distribution-mode=hash`` does.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,41 +67,49 @@ def write_token_index(
       vocabulary) run against the pruned index: the expansion token set
       and dfs come from this tiny table, never from a full postings scan.
       Postings : vocab size ratio is corpus_tokens : distinct_tokens —
-      at 100 TB the vocab is a rounding error next to the postings."""
+      at 100 TB the vocab is a rounding error next to the postings.
+
+    The corpus is tokenized once: the postings write fills a persisted
+    token frame, both tables aggregate that frame, and it is released
+    before the call returns, also when a write raises.  The postings are
+    never read back (no partition listing or schema inference over the
+    bucket files just written)."""
     config = config or LatticeConfig()
-    tokens = lattice_tokenize(docs, config).withColumn(
-        "token_bucket", token_bucket_col("token", n_token_buckets)
+    tokens = (
+        lattice_tokenize(docs, config)
+        .withColumn("token_bucket", token_bucket_col("token", n_token_buckets))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    (
-        tokens.hint("rebalance", "token_bucket")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("token_bucket")
-        .parquet(path)
-    )
-    indexed = docs.sparkSession.read.parquet(path)  # re-read, not re-tokenize
-    (
-        indexed
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("dl"),
-            F.sum((F.col("pos_inc") > 0).cast("long")).alias("dl_norm"),
+    try:
+        (
+            tokens.hint("rebalance", "token_bucket")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "static")
+            .partitionBy("token_bucket")
+            .parquet(path)
         )
-        .write.mode("overwrite")
-        .parquet(f"{path}_doclen")
-    )
-    (
-        indexed
-        .groupBy("token")
-        .agg(
-            F.countDistinct("doc_id").alias("df"),
-            F.min("token_bucket").alias("token_bucket"),
+        (
+            tokens.groupBy("doc_id")
+            .agg(
+                F.count("*").alias("dl"),
+                F.sum((F.col("pos_inc") > 0).cast("long")).alias("dl_norm"),
+            )
+            .write.mode("overwrite")
+            .parquet(f"{path}_doclen")
         )
-        .repartitionByRange(8, "token")
-        .sortWithinPartitions("token")
-        .write.mode("overwrite")
-        .parquet(f"{path}_vocab")
-    )
+        (
+            tokens.groupBy("token")
+            .agg(
+                F.countDistinct("doc_id").alias("df"),
+                F.min("token_bucket").alias("token_bucket"),
+            )
+            .repartitionByRange(8, "token")
+            .sortWithinPartitions("token")
+            .write.mode("overwrite")
+            .parquet(f"{path}_vocab")
+        )
+    finally:
+        tokens.unpersist()
 
 
 def match_lattice_indexed(

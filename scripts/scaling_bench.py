@@ -533,13 +533,13 @@ def main() -> None:
                 f"import sys; sys.path.insert(0, {REPO!r})\n"
                 "from pyspark.sql import SparkSession\n"
                 "from full_lattice_search_spark.datagen import synth_documents\n"
-                "from full_lattice_search_spark.operators.extract import _narrow_cols\n"
+                "from full_lattice_search_spark.operators.extract import _narrow_sql\n"
                 'spark = (SparkSession.builder.master("local[32]")'
                 '.config("spark.ui.enabled","false").getOrCreate())\n'
                 f"synth_documents(spark, {n_docs}, seed=42, mega_every=2000,"
                 f" partitions=128).write.mode('overwrite').parquet({corpus!r})\n"
                 f"spark.read.parquet({corpus!r})"
-                ".select(*_narrow_cols('doc_id', 'spans'))"
+                ".selectExpr(*_narrow_sql('doc_id', 'spans'))"
                 f".write.mode('overwrite').parquet({narrow!r})\n"
                 "spark.stop()\n"
             ),

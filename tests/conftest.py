@@ -45,6 +45,32 @@ def count_jobs(spark):
     return run
 
 
+@pytest.fixture
+def count_py4j(spark, monkeypatch):
+    """``count_py4j(fn)`` -> ``(fn(), n)``: n = the py4j commands the driver
+    sent to the JVM while ``fn`` ran — each one a round trip (a JVM call,
+    an attribute read, an object release), the unit of planning cost."""
+    client = type(spark.sparkContext._gateway._gateway_client)
+    real = client.send_command
+
+    def run(fn):
+        n = 0
+
+        def counted(self, *args, **kwargs):
+            nonlocal n
+            n += 1
+            return real(self, *args, **kwargs)
+
+        monkeypatch.setattr(client, "send_command", counted)
+        try:
+            out = fn()
+        finally:
+            monkeypatch.setattr(client, "send_command", real)
+        return out, n
+
+    return run
+
+
 OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 
 

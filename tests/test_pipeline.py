@@ -151,6 +151,23 @@ def test_no_output_rescan_for_metrics(spark, dirs, monkeypatch):
         assert (r["n_docs"], r["n_spans"]) == (want[0], want[1] or 0)
 
 
+def test_group_filter_hashes_the_output_doc_id(spark, dirs):
+    """Extraction casts doc_id to string and the output is bucketed by that
+    string; a group's input filter must hash the same value.  A bigint id
+    hashed as a bigint lands in another group's bucket, whose dynamic
+    overwrite then drops it."""
+    out_dir, ckpt_dir = dirs
+    docs = synth_documents(spark, 40, seed=3, mega_every=0).selectExpr(
+        "CAST(substr(doc_id, 5) AS BIGINT) AS doc_id", "spans"
+    )
+    m = run_extraction(spark, docs, out_dir, ckpt_dir, n_buckets=8,
+                       buckets_per_job=2)
+    assert m["docs"] == 40
+    result = spark.read.parquet(out_dir)
+    assert result.count() == 40
+    assert result.select("doc_id").distinct().count() == 40
+
+
 def _data_files(directory):
     return list(Path(directory).glob("*.parquet"))
 
@@ -236,3 +253,53 @@ def test_completed_buckets_corrupt_checkpoint_raises(spark, dirs):
     (Path(ckpt_dir) / "part-00000.snappy.parquet").write_bytes(b"not parquet")
     with pytest.raises(Exception, match="(?i)parquet|corrupt|footer|magic"):
         completed_buckets(spark, ckpt_dir)
+
+
+# One run at 32 buckets in one group, built as SQL text, makes ~300 py4j
+# round trips; the budget leaves room for the release commands py4j sends
+# when Python garbage-collects JVM object handles during the call.  Built
+# column by column, the 96 Observation aggregates alone cost ~4,700.
+PLAN_BUDGET_PY4J = 1_500
+
+
+def test_run_extraction_plan_budget(spark, tmp_path, count_py4j):
+    """Planning a run is SQL text, not Column-API chains: one run at 32
+    buckets stays under a stated py4j round-trip budget."""
+    docs = synth_documents(spark, 40, seed=43, mega_every=10).cache()
+    docs.count()
+    # the first run pays one-time class loading; budget the warm call
+    run_extraction(spark, docs, str(tmp_path / "o0"), str(tmp_path / "c0"),
+                   n_buckets=32)
+    m, trips = count_py4j(lambda: run_extraction(
+        spark, docs, str(tmp_path / "o1"), str(tmp_path / "c1"), n_buckets=32,
+    ))
+    assert m["docs"] == 40 and m["buckets_processed"] == 32
+    assert trips < PLAN_BUDGET_PY4J, trips
+    docs.unpersist()
+
+
+@pytest.mark.parametrize("buckets_per_job", [1, 5, None])
+def test_checkpoint_metrics_equal_direct_count(spark, dirs, buckets_per_job):
+    """The observed per-bucket metrics equal a direct count of the written
+    output, whatever the grouping; a bucket no document hashes to gets a
+    row of zeros (a group of only empty buckets aggregates to null)."""
+    out_dir, ckpt_dir = dirs
+    n_buckets = 16
+    docs = synth_documents(spark, 9, seed=47, mega_every=3)
+    run_extraction(spark, docs, out_dir, ckpt_dir, n_buckets=n_buckets,
+                   buckets_per_job=buckets_per_job)
+    direct = {
+        r["bucket"]: (r["n"], r["s"], r["c"])
+        for r in spark.read.parquet(out_dir).groupBy("bucket").agg(
+            F.count("*").alias("n"),
+            F.sum("n_spans").alias("s"),
+            F.sum("n_text_chars").alias("c"),
+        ).collect()
+    }
+    assert sum(n for n, _, _ in direct.values()) == 9
+    assert len(direct) < n_buckets  # some buckets are empty
+    ckpt = spark.read.parquet(ckpt_dir).collect()
+    assert sorted(r["bucket"] for r in ckpt) == list(range(n_buckets))
+    for r in ckpt:
+        want = direct.get(r["bucket"], (0, 0, 0))
+        assert (r["n_docs"], r["n_spans"], r["n_text_chars"]) == want, r

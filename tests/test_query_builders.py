@@ -148,3 +148,30 @@ def test_scan_guard_counts_row_groups(spark, tmp_path, per_core, fires):
     assert (guarded is not df) == fires
     if fires:
         assert guarded.rdd.getNumPartitions() == cores
+
+
+@pytest.fixture(scope="module")
+def empty_doc_dir(tmp_path_factory):
+    """Three ordinary documents and one with empty text."""
+    out = tmp_path_factory.mktemp("sf_empty")
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array([0, 1, 2, 3], pa.int64()),
+            "text": pa.array(["hash join then merge", "", "scan the index",
+                              "merge key order"], pa.string()),
+            "lang": pa.array(["en"] * 4, pa.string()),
+        }),
+        str(out / "documents.parquet"),
+    )
+    return str(out)
+
+
+@pytest.mark.parametrize(
+    "name", ["extract_best_path", "extract_boilerplate", "pdf_extract"]
+)
+def test_first_span_entries_survive_an_empty_document(spark, empty_doc_dir,
+                                                      name):
+    """An entry reading a document's first extracted span must not raise
+    (ANSI INVALID_ARRAY_INDEX) when the extraction keeps no span."""
+    rows = QUERIES[name](spark, empty_doc_dir).collect()
+    assert len(rows) == 4

@@ -240,3 +240,75 @@ def test_lucene_prefix_pruned_without_vocab_still_raises(spark, index_path):
             MatchLatticeParams(slop=3, similarity="lucene"),
             phrase_prefix=True, doclen=doclen,
         )
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_write_never_reads_parquet(spark, tmp_path, monkeypatch):
+    """The stats come from the tokens the postings write produced: no
+    parquet read (no partition listing, no schema inference, no rescan of
+    the bucket files just written)."""
+    import pyspark.sql.readwriter as rw
+
+    docs = synth_documents(spark, 20, seed=53, mega_every=0)
+    reads = []
+    real = rw.DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        reads.append(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(rw.DataFrameReader, "parquet", spy)
+    write_token_index(docs, str(tmp_path / "tokens"), n_token_buckets=4)
+    assert reads == []
+
+
+def test_write_releases_token_cache(spark, tmp_path, monkeypatch):
+    """The token frame persisted for the three writes is released when the
+    call returns and when a write raises."""
+    import pyspark.sql.readwriter as rw
+
+    docs = synth_documents(spark, 20, seed=59, mega_every=0)
+    before = _persistent_rdds(spark)
+    write_token_index(docs, str(tmp_path / "ok"), n_token_buckets=4)
+    assert _persistent_rdds(spark) == before
+
+    class Boom(RuntimeError):
+        pass
+
+    real = rw.DataFrameWriter.parquet
+
+    def doclen_fails(self, path, *args, **kw):
+        if str(path).endswith("_doclen"):
+            raise Boom(path)
+        return real(self, path, *args, **kw)
+
+    monkeypatch.setattr(rw.DataFrameWriter, "parquet", doclen_fails)
+    with pytest.raises(Boom):
+        write_token_index(docs, str(tmp_path / "fails"), n_token_buckets=4)
+    assert _persistent_rdds(spark) == before
+
+
+def test_stats_equal_aggregates_of_the_postings(spark, index_path):
+    """``_doclen`` and ``_vocab`` equal the same aggregates computed from
+    a plain re-read of the written postings."""
+    import pyspark.sql.functions as F
+
+    postings = spark.read.parquet(index_path)
+    rows = lambda df, *cols: sorted(tuple(r[c] for c in cols) for r in df.collect())
+    doclen = postings.groupBy("doc_id").agg(
+        F.count("*").alias("dl"),
+        F.sum((F.col("pos_inc") > 0).cast("long")).alias("dl_norm"),
+    )
+    vocab = postings.groupBy("token").agg(
+        F.countDistinct("doc_id").alias("df"),
+        F.min("token_bucket").alias("token_bucket"),
+    )
+    cols = ("doc_id", "dl", "dl_norm")
+    got = rows(spark.read.parquet(f"{index_path}_doclen"), *cols)
+    assert got == rows(doclen, *cols)
+    assert len(got) == 60
+    cols = ("token", "df", "token_bucket")
+    assert rows(spark.read.parquet(f"{index_path}_vocab"), *cols) == rows(vocab, *cols)
