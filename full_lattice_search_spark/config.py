@@ -155,13 +155,14 @@ class MatchLatticeParams:
     zero_terms_query: str = "none"  # none | all
     boost: float = 1.0
     # Similarity flavor multiplied in when include_span_score=True:
-    # - "engine": the engine-native relational BM25 (bm25_scores) —
+    # - "engine": the engine-native relational BM25 (bm25_from_tf) —
     #   tf = occurrence count, dl = total token count, float64 math.
     # - "lucene": the reconstructed ES-7.x Lucene span similarity
     #   (LegacyBM25 k1+1, sloppy freq = sum of 1/(1+span width),
     #   norm-discounted + SmallFloat-quantized dl, float32 composition) —
     #   reproduces the reference's published end-to-end scores
-    #   (FIXTURES.md §6).  Doc-scan path only.
+    #   (FIXTURES.md §6).  Every path composes it: doc scan, token table
+    #   and token index (q_match_lucene_prefix_indexed).
     similarity: str = "engine"  # engine | lucene
 
     def __post_init__(self) -> None:

@@ -3,13 +3,15 @@
 The reference's ``include_span_score`` multiplies the payload score by the
 Lucene similarity (BM25 by default; LatticePayloadScoreQuery.java:328-339).
 Exact Lucene-BM25 parity is out of scope (FIXTURES.md §6) — this is the
-engine's own corpus-statistics similarity, built entirely from relational
-primitives so Catalyst plans it: two aggregations (document lengths, term
-document-frequencies) + one join, no UDFs.
+engine's own corpus-statistics similarity, written once as SQL text over
+(doc_id, token, tf) rows (``bm25_from_tf``) so Catalyst plans it: one
+df aggregation, one doclen join, one per-doc fold, no UDFs.  Both
+``bm25_scores`` and the composed match scoring
+(``operators.match._compose``) go through it.
 
 At scale the stats tables are tiny (|vocab| and |docs| projections) and the
-df/idf side broadcasts; the per-(doc,term) tf aggregation is the only real
-shuffle and it is map-side combined.
+df/corpus sides broadcast; the per-(doc,term) tf aggregation is the only
+real shuffle and it is map-side combined.
 """
 
 from __future__ import annotations
@@ -20,6 +22,42 @@ from pyspark.sql import functions as F
 K1 = 1.2
 B = 0.75
 
+# idf = ln(1 + (N - df + 0.5)/(df + 0.5)) (Lucene flavor) times
+# tf_norm = tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)), float64.  The `D`
+# suffixes keep the literals DOUBLE (a bare 0.75 parses as DECIMAL).
+_BM25_PART = (
+    "ln(1.0D + (n_docs - df + 0.5D) / (df + 0.5D))"
+    f" * (tf * {K1 + 1.0!r}D / (tf + {K1!r}D * ({1.0 - B!r}D"
+    f" + {B!r}D * dl / (total_len / n_docs))))"
+)
+
+
+def bm25_from_tf(tf: DataFrame, doclen: DataFrame) -> DataFrame:
+    """(doc_id, bm25) for every document with a row in ``tf``.
+
+    ``tf``: (doc_id, token, tf) — one row per document and candidate
+    token.  A token's df is its row count.  ``doclen``: (doc_id, dl); N
+    and avgdl count only documents with dl > 0 (a document without a
+    token is not in the corpus statistics).  Each document's parts are
+    summed in token order: a float sum in row-arrival order would tie the
+    score's last bits to the physical layout of the input (file count,
+    shuffle fetch order)."""
+    corpus = doclen.where("dl > 0").selectExpr(
+        "count(1) AS n_docs", "sum(dl) AS total_len"
+    )
+    df = tf.groupBy("token").agg(F.expr("count(1) AS df"))
+    return (
+        tf.join(F.broadcast(df), "token")
+        .join(doclen.select("doc_id", "dl"), "doc_id")
+        .crossJoin(F.broadcast(corpus))
+        .selectExpr("doc_id", "token", f"{_BM25_PART} AS p")
+        .groupBy("doc_id")
+        .agg(F.expr(
+            "aggregate(array_sort(collect_list(struct(token, p))), 0D,"
+            " (acc, x) -> acc + x.p) AS bm25"
+        ))
+    )
+
 
 def bm25_scores(
     tokens: DataFrame,
@@ -28,10 +66,8 @@ def bm25_scores(
     prefix_last: bool = False,
     doclen: DataFrame | None = None,
 ) -> DataFrame:
-    """(doc_id, bm25) for every document matching >= 1 query term.
-
-    idf = ln(1 + (N - df + 0.5)/(df + 0.5)) (Lucene flavor);
-    tf_norm = tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)).
+    """(doc_id, bm25) for every document matching >= 1 query term
+    (``bm25_from_tf`` over the token table's candidate-term counts).
 
     ``prefix_last``: phrase-prefix queries expand the final term to every
     token with the prefix; each expanded token contributes with its own
@@ -43,65 +79,20 @@ def bm25_scores(
     recomputing lengths from the visible rows would be wrong AND would
     defeat the pruning with a full scan.
     """
+    from full_lattice_search_spark.operators.match import candidate_pred
+
     toks = tokens.select("doc_id", "token")
     if doclen is None:
-        doclen = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    corpus = doclen.agg(
-        F.count("*").alias("n_docs"), F.sum("dl").alias("total_len")
+        doclen = toks.groupBy("doc_id").agg(F.expr("count(1) AS dl"))
+    tf = (
+        toks.filter(candidate_pred(terms, prefix_last))
+        .groupBy("doc_id", "token")
+        .agg(F.expr("count(1) AS tf"))
     )
-
-    # multi-phrase slots (list elements) flatten: every alternative is a
-    # candidate term contributing its own tf/df
-    flat = [x for t in terms for x in ([t] if isinstance(t, str) else t)]
-    pred = F.col("token").isin(flat)
-    if prefix_last and terms:
-        pred = pred | F.col("token").startswith(terms[-1])
-    cand = toks.filter(pred)
-    tf = cand.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
-    df_ = cand.groupBy("token").agg(
-        F.countDistinct("doc_id").alias("df")
-    )
-
-    scored = (
-        tf.join(F.broadcast(df_), "token")
-        .join(doclen, "doc_id")
-        .crossJoin(F.broadcast(corpus))
-        .withColumn(
-            "idf",
-            F.log(
-                1.0
-                + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-        )
-        .withColumn(
-            "tf_norm",
-            (F.col("tf") * (K1 + 1))
-            / (
-                F.col("tf")
-                + K1
-                * (
-                    1.0
-                    - B
-                    + B * F.col("dl") / (F.col("total_len") / F.col("n_docs"))
-                )
-            ),
-        )
-        # each doc's per-term parts are summed in token order: a float sum
-        # in row-arrival order would tie the score's last bits to the
-        # physical layout of ``tokens`` (file count, shuffle fetch order)
-        .withColumn("p", F.col("idf") * F.col("tf_norm"))
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("token", "p"))).alias("ps"))
-        .select(
-            "doc_id",
-            F.aggregate("ps", F.lit(0.0), lambda acc, x: acc + x["p"]).alias(
-                "bm25"
-            ),
-        )
-    )
+    scored = bm25_from_tf(tf, doclen)
     if round_to is not None:
-        scored = scored.select(
-            "doc_id", F.round("bm25", round_to).alias("bm25")
+        scored = scored.selectExpr(
+            "doc_id", f"round(bm25, {int(round_to)}) AS bm25"
         )
     return scored
 
@@ -139,7 +130,7 @@ def lucene_legacy_span_similarity(
     published end-to-end scores in the reference README (``README.md:291``
     36.987705, ``README.md:393`` 9041.438) and pinned to float32.  Used by
     the parity goldens (FIXTURES.md §6) to quantify the delta between the
-    engine's relational BM25 (``bm25_scores`` above) and Lucene's; not part
+    engine's relational BM25 (``bm25_from_tf`` above) and Lucene's; not part
     of the query path.
 
     The reconstructed flavor (each element verified against the README
@@ -159,7 +150,7 @@ def lucene_legacy_span_similarity(
       on any lattice corpus by construction.
     - all of it composed in float32.
 
-    The engine's ``bm25_scores`` deliberately differs: classic (k1+1)
+    The engine's ``bm25_from_tf`` deliberately differs: classic (k1+1)
     numerator but tf = occurrence count (not sloppy freq), dl = total
     token count for both dl and avgdl, float64 relational math.
     """

@@ -53,7 +53,11 @@ from full_lattice_search_spark.functions.tokenizer import (
     text_values_col,
     tokenize_pandas,
 )
-from full_lattice_search_spark.schema import EXPLAIN_HITS_SCHEMA, HITS_SCHEMA
+from full_lattice_search_spark.schema import (
+    EXPLAIN_HITS_SCHEMA,
+    HITS_SCHEMA,
+    SPAN_STATS_SCHEMA,
+)
 
 
 def analyze_query(
@@ -299,20 +303,27 @@ _EMPTY_HITS = pd.DataFrame(
 )
 
 
-def _hits_output_schema(explain: bool, with_freq: bool):
-    """Arrow schema of ``match_tokens_pandas`` output — the column order
-    mirrors the kernel's construction order (freq before the explain
-    arrays)."""
+_SPAN_COLS = ("span_start", "span_end", "span_score")
+
+
+def _kernel_schema(base, explain: bool, doclen: bool = False):
+    """Arrow schema of a matching kernel's output: ``base`` (HITS_SCHEMA
+    or the SPAN_STATS_SCHEMA contract), then the explain arrays, then —
+    for a kernel that sees every token of its documents — their lengths.
+    The order mirrors the kernels' construction order."""
     from pyspark.sql import types as T
 
-    fields = list(HITS_SCHEMA.fields)
-    if with_freq:
-        fields.append(T.StructField("sloppy_freq", T.DoubleType(), True))
+    fields = list(base.fields)
     if explain:
         fields += [
-            T.StructField("span_start", T.ArrayType(T.LongType()), True),
-            T.StructField("span_end", T.ArrayType(T.LongType()), True),
-            T.StructField("span_score", T.ArrayType(T.DoubleType()), True),
+            f for f in EXPLAIN_HITS_SCHEMA.fields if f.name in _SPAN_COLS
+        ]
+    if doclen:
+        fields += [
+            T.StructField("dl", T.LongType(), False),
+            # overlap-discounted length (posinc>0 tokens only — what a
+            # Lucene norm stores before quantization)
+            T.StructField("dl_norm", T.LongType(), False),
         ]
     return T.StructType(fields)
 
@@ -331,8 +342,8 @@ def _empty_hits(explain: bool, with_freq: bool = False) -> pd.DataFrame:
 _DOC_STRIDE = np.int64(1) << 40
 
 
-# Every O(docs) stats frame the composed doc-scan scoring persists (and
-# every intermediate frame a query builder persists) is tracked here so
+# Every stats frame composed scoring persists (and every intermediate
+# frame a query builder persists) is tracked here so
 # callers can scope its lifetime instead of reaching for
 # spark.catalog.clearCache() (which would evict unrelated caches too).
 _COMPOSED_STATS_CACHE: list[DataFrame] = []
@@ -347,11 +358,13 @@ def track_cached(df: DataFrame) -> DataFrame:
 
 @contextlib.contextmanager
 def composed_cache_scope():
-    """Scoped lifecycle for composed doc-scan query caches.
+    """Scoped lifecycle for composed query caches.
 
-    ``match_lattice`` with the reference-default ``include_span_score``
-    persists one O(docs) statistics frame per query and Spark keeps it
-    registered until unpersist/session end.  A long-running interactive
+    With the reference-default ``include_span_score`` every match operator
+    persists one statistics frame per query — O(docs) rows for
+    ``match_lattice``, O(candidate docs) for ``match_lattice_tokens`` and
+    ``match_lattice_indexed`` — and Spark keeps it registered until
+    unpersist/session end.  A long-running interactive
     driver issuing many distinct composed queries accumulates cache;
     wrap each query (or batch of queries) in this scope and every stats
     frame persisted inside is unpersisted on exit::
@@ -361,9 +374,7 @@ def composed_cache_scope():
             hits.collect()          # consume INSIDE the scope
 
     Consume the hits inside the scope — using the DataFrame afterwards
-    still works but recomputes the stats pass.  Standing queries should
-    use the materialized token index instead (statistics live in the
-    index; nothing is cached per query)."""
+    still works but recomputes the stats pass."""
     mark = len(_COMPOSED_STATS_CACHE)
     try:
         yield
@@ -423,10 +434,7 @@ def match_tokens_pandas(
     if slop < 0:  # audio seconds→slop conversion can go negative: no match
         return _empty_hits(explain, with_freq)
     assert slop < (1 << 39), "slop out of range for position encoding"
-    keep = tokens["token"].isin(_flat_terms(terms))
-    if prefix_last and terms:
-        keep = keep | tokens["token"].str.startswith(terms[-1])
-    cand = tokens[keep]
+    cand = tokens[_candidate_mask(tokens["token"], terms, prefix_last)]
     if len(cand) == 0:
         return _empty_hits(explain, with_freq)
     # postings order: by (abs_pos, seq) per term — stable, deterministic
@@ -520,6 +528,59 @@ def match_tokens_pandas(
         out["span_score"] = pd.Series(
             np.split(spans.astype(np.float64), cuts), dtype=object
         )
+    return out
+
+
+def _cells(values: pd.Series) -> list:
+    """Array cells for Arrow: a doc the lookup missed maps to NaN, which
+    must become None (a null cell), not a float."""
+    return [None if isinstance(x, float) else x for x in values]
+
+
+def span_stats_pandas(
+    tokens: pd.DataFrame,
+    doc_ids,
+    terms: list,
+    slop: int,
+    in_order: bool,
+    payload_function: str,
+    len_norm: float,
+    dtype: type = np.float32,
+    prefix_last: bool = False,
+    explain: bool = False,
+) -> pd.DataFrame:
+    """One batch of the composed-scoring contract (SPAN_STATS_SCHEMA):
+    one row per document of ``doc_ids``, whose token rows ``tokens``
+    holds completely (at least its candidate-term rows).
+
+    A row carries the hit fields (``payload_score``, null for a document
+    without a span, and ``n_spans``), the document's candidate-term
+    frequencies as parallel ``tf_tokens``/``tf_counts`` arrays (null
+    without a candidate term), the float32 Lucene ``sloppy_freq`` and,
+    with ``explain``, the per-span arrays.  Every matching kernel emits
+    these rows when scoring is composed, so the similarity is composed
+    in one place from the pass that matched."""
+    hits = match_tokens_pandas(
+        tokens, terms, slop, in_order, payload_function, len_norm, dtype,
+        prefix_last=prefix_last, explain=explain, with_freq=True,
+    ).set_index("doc_id")
+    out = pd.DataFrame({"doc_id": np.asarray(doc_ids, dtype=object)})
+    doc = out["doc_id"]
+    out["payload_score"] = doc.map(hits["score"])
+    out["n_spans"] = doc.map(hits["n_spans"]).fillna(0).astype("int32")
+    tf = (
+        tokens[_candidate_mask(tokens["token"], terms, prefix_last)]
+        .groupby(["doc_id", "token"])
+        .size()
+        .reset_index(name="tf")
+        .groupby("doc_id")
+    )
+    out["tf_tokens"] = _cells(doc.map(tf["token"].agg(list)))
+    out["tf_counts"] = _cells(doc.map(tf["tf"].agg(list)))
+    out["sloppy_freq"] = doc.map(hits["sloppy_freq"])
+    if explain:
+        for c in _SPAN_COLS:
+            out[c] = _cells(doc.map(hits[c]))
     return out
 
 
@@ -621,211 +682,29 @@ def _flat_terms(terms: list) -> list[str]:
     return out
 
 
+def _candidate_mask(tokens: pd.Series, terms: list, prefix: bool) -> pd.Series:
+    """Rows of a token column that can take part in a match."""
+    keep = tokens.isin(_flat_terms(terms))
+    if prefix and terms:
+        keep |= tokens.str.startswith(terms[-1]).fillna(False).astype(bool)
+    return keep
+
+
+def candidate_pred(terms: list, prefix: bool = False):
+    """``_candidate_mask`` as a Column predicate over ``token`` — the
+    filter pushed down to a token-table scan."""
+    pred = F.col("token").isin(_flat_terms(terms))
+    if prefix and terms:
+        pred = pred | F.col("token").startswith(terms[-1])
+    return pred
+
+
 def _zero_terms_hits(source: DataFrame, params: MatchLatticeParams) -> DataFrame:
     """zero_terms_query='all': every doc matches with MIN_SCORE (× boost)."""
     return source.select(
         "doc_id",
         F.lit(float(MIN_SCORE) * params.boost).alias("score"),
         F.lit(0).alias("n_spans"),
-    )
-
-
-def _compose_score(
-    hits: DataFrame,
-    tokens: DataFrame,
-    terms: list[str],
-    params: MatchLatticeParams,
-    phrase_prefix: bool,
-    doclen: DataFrame | None = None,
-) -> DataFrame:
-    """A7: ``include_span_score`` — multiply the engine-native similarity
-    (BM25 over the token table) into the payload score, mirroring
-    ``LatticePayloadScoreQuery.java:333-339`` (``scoreCurrentDoc`` returns
-    ``getSpanScore() * payloadScore`` when includeSpanScore), then apply the
-    builder ``boost``.  Exposes the decomposition as ``payload_score`` /
-    ``similarity`` columns (the Explanation analog at the doc level).
-
-    The joined tables are both keyed by doc_id — an ordinary shuffle join
-    that AQE converts to broadcast when the hit list is small."""
-    from full_lattice_search_spark.operators.bm25 import bm25_scores
-
-    boost = float(params.boost)
-    sims = bm25_scores(tokens, terms, prefix_last=phrase_prefix, doclen=doclen)
-    sims = sims.withColumnRenamed("bm25", "similarity")
-    scored = (
-        hits.withColumnRenamed("score", "payload_score")
-        .join(sims, "doc_id")
-        .withColumn(
-            "score",
-            F.col("payload_score") * F.col("similarity") * F.lit(boost),
-        )
-    )
-    front = ["doc_id", "score", "n_spans", "payload_score", "similarity"]
-    rest = [c for c in scored.columns if c not in front]
-    return scored.select(*front, *rest)
-
-
-# Above this many distinct candidate tokens the idf map is no longer
-# inlined as a plan literal (driver memory / plan size); the composition
-# falls back to a relational join on the df frame.
-_MAX_IDF_LITERALS = 4096
-
-
-def _compose_from_stats_join(
-    matched: DataFrame,
-    token_df: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    boost: float,
-) -> DataFrame:
-    """Join-based twin of ``_compose_from_stats``'s literal-map fold, for
-    unbounded candidate vocabularies (short phrase_prefix on a large
-    corpus): idf stays a distributed (token, df) frame, per-doc tf entries
-    explode (≤ candidate terms per doc) and join on token — AQE picks
-    broadcast vs shuffle by the actual df-frame size.  Same formula and
-    constants; only the float64 summation order can differ."""
-    from full_lattice_search_spark.operators.bm25 import B, K1
-
-    idf_df = token_df.select(
-        "token",
-        F.log(
-            F.lit(1.0)
-            + (F.lit(float(n_docs)) - F.col("count") + F.lit(0.5))
-            / (F.col("count") + F.lit(0.5))
-        ).alias("idf"),
-    )
-    exploded = matched.select(
-        "doc_id",
-        "n_spans",
-        "payload_score",
-        F.col("dl").cast("double").alias("dl_d"),
-        F.explode(F.arrays_zip("tf_tokens", "tf_counts")).alias("z"),
-    ).select(
-        "doc_id",
-        "n_spans",
-        "payload_score",
-        "dl_d",
-        F.col("z.tf_tokens").alias("token"),
-        F.col("z.tf_counts").cast("double").alias("tf"),
-    )
-    part = F.col("idf") * (
-        F.col("tf")
-        * F.lit(K1 + 1.0)
-        / (
-            F.col("tf")
-            + F.lit(K1)
-            * (F.lit(1.0 - B) + F.lit(B) * F.col("dl_d") / F.lit(avgdl))
-        )
-    )
-    return (
-        exploded.join(idf_df, "token")
-        .groupBy("doc_id")
-        .agg(
-            F.first("n_spans").alias("n_spans"),
-            F.first("payload_score").alias("payload_score"),
-            F.sum(part).alias("similarity"),
-        )
-        .withColumn(
-            "score",
-            F.col("payload_score") * F.col("similarity") * F.lit(boost),
-        )
-        .select("doc_id", "score", "n_spans", "payload_score", "similarity")
-    )
-
-
-def _compose_from_stats(stats: DataFrame, boost: float) -> DataFrame:
-    """A7 composition from the SINGLE tokenize pass: ``stats`` is the
-    per-document output of the fused tokenize+match+stats kernel
-    (SPAN_STATS_SCHEMA) — payload-score hit fields plus the raw corpus
-    statistics (dl, per-query-term tf).  BM25 is assembled from those
-    columns with the same formula/constants as ``bm25_scores``.
-
-    Corpus statistics (n_docs, total length, per-term df — a
-    query-vocabulary-sized set) are collected by one eager tiny job over
-    the persisted stats frame and become PLAN-TIME LITERALS (an idf map),
-    so the per-doc similarity is a row-local fold over that doc's ≤|terms|
-    tf entries — no explode, no join, no aggregation shuffle.  (The HOF
-    lambda runs interpreted, but over a handful of elements per row with
-    literal-only math — not the hot-path-HOF anti-pattern, which is about
-    corpus-sized arrays re-evaluating heavy subexpressions.)
-
-    ``stats`` is consumed by the eager stats job and the final
-    projection, so the caller persists it — one materialization of one
-    row per document, O(docs) not O(tokens)."""
-    import math
-
-    from full_lattice_search_spark.operators.bm25 import B, K1
-
-    crow = stats.filter(F.col("dl") > 0).agg(
-        F.count("*").alias("n"), F.sum("dl").alias("t")
-    ).collect()[0]
-    n_docs = int(crow["n"] or 0)
-    total_len = int(crow["t"] or 0)
-    token_df = (
-        stats.filter(F.size("tf_tokens") > 0)
-        .select(F.explode("tf_tokens").alias("token"))
-        .groupBy("token")
-        .count()
-    )
-    # The literal idf map is only safe for a bounded vocabulary: a
-    # phrase_prefix query's candidate set is every distinct corpus token
-    # with the prefix, and inlining that into the plan (and the driver)
-    # does not scale.  Probe with limit(N+1) — if the vocabulary exceeds
-    # the cap, compose via a relational join on the df frame instead.
-    df_rows = token_df.limit(_MAX_IDF_LITERALS + 1).collect()
-    matched = stats.filter("matched")
-    if n_docs == 0 or not df_rows:  # no postings → no matched rows either
-        return matched.select(
-            "doc_id",
-            F.lit(None).cast("double").alias("score"),
-            "n_spans",
-            "payload_score",
-            F.lit(None).cast("double").alias("similarity"),
-        )
-    avgdl = total_len / n_docs
-    if len(df_rows) > _MAX_IDF_LITERALS:
-        return _compose_from_stats_join(
-            matched, token_df, n_docs, avgdl, boost
-        )
-    idf_map = F.create_map(
-        *[
-            c
-            for r in df_rows
-            for c in (
-                F.lit(r["token"]),
-                F.lit(
-                    math.log(
-                        1.0
-                        + (n_docs - int(r["count"]) + 0.5)
-                        / (int(r["count"]) + 0.5)
-                    )
-                ),
-            )
-        ]
-    )
-    dl_d = F.col("dl").cast("double")
-    similarity = F.aggregate(
-        F.arrays_zip("tf_tokens", "tf_counts"),
-        F.lit(0.0),
-        lambda acc, z: acc
-        + F.element_at(idf_map, z["tf_tokens"])
-        * (
-            z["tf_counts"].cast("double")
-            * F.lit(K1 + 1.0)
-            / (
-                z["tf_counts"].cast("double")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * dl_d / F.lit(avgdl))
-            )
-        ),
-    )
-    return (
-        matched.withColumn("similarity", similarity)
-        .withColumn(
-            "score",
-            F.col("payload_score") * F.col("similarity") * F.lit(boost),
-        )
-        .select("doc_id", "score", "n_spans", "payload_score", "similarity")
     )
 
 
@@ -846,53 +725,6 @@ def _lucene_idf_terms(
             t for t in sorted(dfs) if t.startswith(p) and t not in out
         )
     return [t for t in out if dfs.get(t, 0) > 0]
-
-
-def _compose_from_stats_lucene(
-    stats: DataFrame, terms: list, boost: float, prefix: bool = False
-) -> DataFrame:
-    """``similarity='lucene'``: compose the RECONSTRUCTED ES-7.x Lucene
-    span similarity (see ``bm25.lucene_legacy_span_similarity`` and
-    FIXTURES.md §6) from the single-pass stats frame — the engine then
-    reproduces the reference's published end-to-end scores:
-
-    - freq: the kernel's float32 sloppy span frequency (Σ 1/(1+gaps));
-    - dl: overlap-discounted token count, quantized to Lucene's 4-bit
-      SmallFloat norm (byte4 roundtrip with the 24-value free-value
-      offset — exact below 40, 24 + top-4-bits of (dl-24) above);
-    - avgdl: sumTotalTermFreq/docCount (FULL token count — Lucene's dl
-      and avgdl are structurally inconsistent on lattice fields);
-    - idf/weight: corpus constants — ONE eager tiny statistics job over
-      the persisted stats frame collects k df values + 2 scalars (like
-      the IVF literal centroids), then they become plan-time literals;
-    - every composition step cast through float32, matching Lucene's
-      association order.
-    """
-    df_rows = (
-        stats.filter(F.size("tf_tokens") > 0)
-        .select(F.explode("tf_tokens").alias("token"))
-        .groupBy("token")
-        .count()
-        .collect()
-    )
-    dfs = {r["token"]: int(r["count"]) for r in df_rows}
-    weight, avgdl = _lucene_corpus_consts(
-        stats.select("doc_id", "dl"),
-        dfs,
-        _lucene_idf_terms(terms, dfs, prefix),
-        boost,
-    )
-    sim = _lucene_sim_sql(weight, avgdl)
-    return (
-        stats.filter("matched")
-        .withColumn("similarity", F.expr(sim).cast("double"))
-        .withColumn(
-            "score",
-            F.expr(f"cast(cast(payload_score as float) * {sim} as float)")
-            .cast("double"),
-        )
-        .select("doc_id", "score", "n_spans", "payload_score", "similarity")
-    )
 
 
 def _lucene_sim_sql(weight: float, avgdl: float) -> str:
@@ -929,8 +761,8 @@ def _lucene_corpus_consts(
 
     from full_lattice_search_spark.operators.bm25 import K1
 
-    crow = doclen.filter(F.col("dl") > 0).agg(
-        F.count("*").alias("n"), F.sum("dl").alias("t")
+    crow = doclen.where("dl > 0").selectExpr(
+        "count(1) AS n", "sum(dl) AS t"
     ).collect()[0]
     n_docs = int(crow["n"] or 0)
     total_len = int(crow["t"] or 0)
@@ -949,86 +781,94 @@ def _lucene_corpus_consts(
     return weight, avgdl
 
 
-def _compose_lucene_tokens(
-    hits: DataFrame,
-    tokens: DataFrame,
+def _compose(
+    stats: DataFrame,
+    doclen: DataFrame,
     terms: list,
-    boost: float,
-    doclen: DataFrame | None = None,
-    prefix: bool = False,
+    params: MatchLatticeParams,
+    prefix: bool,
     vocab: DataFrame | None = None,
 ) -> DataFrame:
-    """``similarity='lucene'`` for the token-table path: corpus statistics
-    (dl, overlap-discounted dl_norm, per-term df) come from the token
-    table itself — the index-statistics analog; one eager tiny job turns
-    them into plan-time literals, then the float32 composition joins the
-    per-doc dl_norm onto the freq-carrying hits.
+    """A7 ``include_span_score``: multiply the similarity into the payload
+    score, mirroring ``LatticePayloadScoreQuery.java:333-339``
+    (``scoreCurrentDoc`` returns ``getSpanScore() * payloadScore``), and
+    apply the builder ``boost``.  The decomposition is exposed as
+    ``payload_score`` / ``similarity`` columns (the Explanation analog at
+    the doc level); explain arrays ride along.
 
-    ``doclen``: precomputed (doc_id, dl, dl_norm) statistics table (the
-    materialized index writes one).  Required when ``tokens`` is a pruned
-    view: per-doc lengths can't be recovered from pruned postings, while
-    per-term df CAN (a term's postings all live in its own bucket).
+    ``stats``: the persisted per-doc frame a matching kernel emitted
+    (``span_stats_pandas``).  ``doclen``: (doc_id, dl[, dl_norm]) for
+    every document of the corpus.  ``vocab``: an optional (token, df)
+    term dictionary; without it dfs come from the stats rows, which hold
+    every document with a candidate term.
 
-    ``vocab``: precomputed (token, df) term dictionary (the index writes
-    one at ``{path}_vocab``).  When given, dfs come from it instead of a
-    postings aggregation — required for ``prefix`` over a pruned view
-    (the expansion vocabulary spans buckets the view may not include),
-    and cheaper everywhere (the dictionary is pre-aggregated and
-    token-sorted, so the prefix filter is a parquet range scan)."""
-    if doclen is None:
-        doclen = tokens.groupBy(
-            F.col("doc_id").cast("string").alias("doc_id")
-        ).agg(
-            F.count("*").alias("dl"),
-            F.sum((F.col("pos_inc") > 0).cast("long")).alias("dl_norm"),
+    - ``similarity='engine'``: ``bm25_from_tf`` over the exploded tf
+      arrays — the same expression ``bm25_scores`` uses.
+    - ``similarity='lucene'``: the reconstructed ES-7.x span similarity
+      (``bm25.lucene_legacy_span_similarity``, FIXTURES.md §6), which
+      reproduces the reference's published end-to-end scores.  freq is
+      the kernel's float32 sloppy span frequency (Σ 1/(1+gaps)); dl is
+      ``dl_norm``, the overlap-discounted token count, quantized to
+      Lucene's SmallFloat norm byte; avgdl counts the FULL token count
+      (Lucene's dl and avgdl are structurally inconsistent on lattice
+      fields).  idf and weight are corpus constants collected by one tiny
+      eager job each (k df values, 2 scalars) and inlined as literals;
+      every step is cast through float32 in Lucene's association order,
+      and the boost is folded into the weight."""
+    from full_lattice_search_spark.operators.bm25 import bm25_from_tf
+
+    lucene = params.similarity == "lucene"
+    doclen = doclen.selectExpr(
+        "CAST(doc_id AS STRING) AS doc_id", "dl",
+        *(["dl_norm"] if lucene else []),
+    )
+    if lucene:
+        if vocab is not None:
+            df_rows = vocab.filter(candidate_pred(terms, prefix))
+        else:
+            df_rows = stats.selectExpr("explode(tf_tokens) AS token").groupBy(
+                "token"
+            ).agg(F.expr("count(1) AS df"))
+        dfs = {r["token"]: int(r["df"]) for r in df_rows.collect()}
+        weight, avgdl = _lucene_corpus_consts(
+            doclen, dfs, _lucene_idf_terms(terms, dfs, prefix),
+            float(params.boost),
         )
-    elif "dl_norm" not in doclen.columns:
-        raise ValueError(
-            "similarity='lucene' needs a doclen table with a dl_norm "
-            "column (overlap-discounted length); rebuild the token index "
-            "with this version's write_token_index"
+        sims = doclen.selectExpr("doc_id", "dl_norm")
+        similarity = _lucene_sim_sql(weight, avgdl)
+        score = (
+            "CAST(CAST(payload_score AS FLOAT)"
+            " * CAST(similarity AS FLOAT) AS FLOAT)"
         )
     else:
-        doclen = doclen.select(
-            F.col("doc_id").cast("string").alias("doc_id"), "dl", "dl_norm"
+        sims = bm25_from_tf(
+            stats.selectExpr(
+                "doc_id",
+                "inline(arrays_zip(tf_tokens, tf_counts)) AS (token, tf)",
+            ),
+            doclen,
         )
-    df_pred = F.col("token").isin(_flat_terms(terms))
-    if prefix:
-        df_pred = df_pred | F.col("token").startswith(terms[-1])
-    if vocab is not None:
-        df_rows = vocab.filter(df_pred).select("token", "df").collect()
-    else:
-        df_rows = (
-            tokens.filter(df_pred)
-            .groupBy("token")
-            .agg(F.countDistinct("doc_id").alias("df"))
-            .collect()
-        )
-    dfs = {r["token"]: int(r["df"]) for r in df_rows}
-    weight, avgdl = _lucene_corpus_consts(
-        doclen, dfs, _lucene_idf_terms(terms, dfs, prefix), boost
+        similarity = "bm25"
+        score = f"payload_score * similarity * {float(params.boost)!r}D"
+    explain = [c for c in _SPAN_COLS if c in stats.columns]
+    return (
+        stats.where("n_spans > 0")
+        .join(sims, "doc_id")
+        .selectExpr("doc_id", "n_spans", "payload_score",
+                    f"CAST({similarity} AS DOUBLE) AS similarity", *explain)
+        .selectExpr("doc_id", f"CAST({score} AS DOUBLE) AS score", "n_spans",
+                    "payload_score", "similarity", *explain)
     )
-    sim = _lucene_sim_sql(weight, avgdl)
-    scored = (
-        hits.withColumnRenamed("score", "payload_score")
-        .join(doclen.select("doc_id", "dl_norm"), "doc_id")
-        .withColumn("similarity", F.expr(sim).cast("double"))
-        .withColumn(
-            "score",
-            F.expr(f"cast(cast(payload_score as float) * {sim} as float)")
-            .cast("double"),
-        )
-    )
-    front = ["doc_id", "score", "n_spans", "payload_score", "similarity"]
-    # explain arrays (span_start/span_end/span_score) ride along; the
-    # composition internals (dl_norm, sloppy_freq) are dropped — freq is
-    # recomputable from the span boundaries
-    rest = [
-        c
-        for c in scored.columns
-        if c not in front and c not in ("dl_norm", "sloppy_freq")
-    ]
-    return scored.select(*front, *rest)
+
+
+def _persisted(stats: DataFrame) -> DataFrame:
+    """The one tracked persist of a composed query's stats frame: the
+    composition reads it more than once (dfs or the tf rows, the hits,
+    on the doc-scan path the lengths too), and every read would re-run
+    the kernel."""
+    from pyspark import StorageLevel
+
+    return track_cached(stats.persist(StorageLevel.MEMORY_AND_DISK))
 
 
 def match_lattice(
@@ -1052,34 +892,33 @@ def match_lattice(
     TakeOrderedAndProject.  No shuffle except the final top-k merge.
 
     With the reference-default ``include_span_score=True`` the payload score
-    is multiplied by the engine-native BM25 similarity.  The corpus
-    statistics BM25 needs (document lengths, term frequencies, document
-    frequencies) come from the SAME fused kernel that matches: it emits one
-    row per document carrying both the hit fields and (dl, per-term tf),
-    and the similarity is composed from those columns — the corpus is
-    tokenized exactly once.  The per-doc stats frame feeds the eager
-    statistics job and the hit projection, so it is persisted
-    (MEMORY_AND_DISK) — one O(docs)-row materialization, never O(tokens).
+    is multiplied by the similarity (``params.similarity``).  The corpus
+    statistics it needs (document lengths, term frequencies, document
+    frequencies) come from the SAME kernel pass that matches: it emits one
+    stats row per document (``span_stats_pandas``, plus the document's
+    lengths) and ``_compose`` assembles the similarity from those columns
+    — the corpus is tokenized exactly once.  ``explain=True`` changes
+    nothing in that shape: the explain arrays are columns of the same
+    stats rows.  The composition reads the stats frame more than once, so
+    it is persisted (MEMORY_AND_DISK) — one O(docs)-row materialization,
+    never O(tokens).
     Cache lifecycle: Spark keeps the cached frame registered until
     ``unpersist``/session end.  A LONG-RUNNING driver issuing many
     ad-hoc composed queries should wrap each in
     ``composed_cache_scope()`` (or call ``release_composed_caches()``
     periodically) — scoped unpersist of exactly these frames, nothing
-    else; standing queries belong on the materialized token index
-    (statistics live in the index, nothing is cached per query).  A
-    per-job driver doesn't care.
+    else.  A per-job driver doesn't care.
     The JVM substring prefilter is skipped on this path because corpus
     statistics are defined over every document, matched or not; the
     matcher's own term filter makes non-candidate docs nearly free.
-    ``explain=True`` composed scoring keeps the two-pass formulation (the
-    explain arrays don't flow through the stats schema).  Deployments at
-    scale can still prefer the materialized token index
-    (``match_lattice_tokens``), where statistics come from the same table
-    the matcher reads.
+    Deployments at scale can still prefer the materialized token index
+    (``match_lattice_tokens``), where lengths and dfs come from the index
+    and the stats frame holds only the candidate documents.
     """
     config = config or LatticeConfig()
     params = params or MatchLatticeParams()
-    if params.include_span_score and docs.isStreaming:
+    composed = params.include_span_score
+    if composed and docs.isStreaming:
         raise ValueError(
             "include_span_score=True needs corpus statistics, which are "
             "undefined over an unbounded stream; pass "
@@ -1103,101 +942,9 @@ def match_lattice(
         )
 
     narrow = docs.select(
-        F.col(doc_id_col).cast("string").alias("doc_id"),
+        F.expr(f"CAST({doc_id_col} AS STRING) AS doc_id"),
         text_values_col(spans_col).alias("values"),
     )
-
-    in_order, pf, ln = params.in_order, params.payload_function, (
-        params.payload_length_norm_factor
-    )
-
-    if params.include_span_score and not explain:
-        # SINGLE-PASS composed scoring: the same kernel that matches also
-        # emits each document's dl and per-query-term tf, and BM25 is
-        # composed from those columns (see docstring).  No prefilter —
-        # corpus statistics cover every document.
-        from pyspark import StorageLevel
-
-        from full_lattice_search_spark.schema import SPAN_STATS_SCHEMA
-
-        want_lucene = params.similarity == "lucene"
-
-        def run_stats(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                toks = tokenize_pandas(pdf["doc_id"], pdf["values"], config)
-                hits_pdf = match_tokens_pandas(
-                    toks, terms, slop, in_order, pf, ln, dtype,
-                    prefix_last=phrase_prefix, with_freq=want_lucene,
-                )
-                out = pd.DataFrame({"doc_id": pdf["doc_id"].astype(str)})
-                dl = toks.groupby("doc_id").size()
-                out["dl"] = (
-                    out["doc_id"].map(dl).fillna(0).astype("int64")
-                )
-                # overlap-discounted length (Lucene norms don't count
-                # posinc=0 lattice alternatives)
-                dln = (
-                    toks[toks["pos_inc"].to_numpy() > 0]
-                    .groupby("doc_id")
-                    .size()
-                )
-                out["dl_norm"] = (
-                    out["doc_id"].map(dln).fillna(0).astype("int64")
-                )
-                cand_mask = toks["token"].isin(_flat_terms(terms))
-                if phrase_prefix and terms:
-                    cand_mask |= (
-                        toks["token"].str.startswith(terms[-1]).fillna(False)
-                    )
-                tf = (
-                    toks[cand_mask]
-                    .groupby(["doc_id", "token"])
-                    .size()
-                    .reset_index(name="tf")
-                )
-                g = tf.groupby("doc_id")
-                # docs without any candidate term map to NaN — Arrow needs
-                # None for a null array cell, not a float
-                out["tf_tokens"] = [
-                    x if isinstance(x, list) else None
-                    for x in out["doc_id"].map(g["token"].agg(list))
-                ]
-                out["tf_counts"] = [
-                    x if isinstance(x, list) else None
-                    for x in out["doc_id"].map(g["tf"].agg(list))
-                ]
-                hm = hits_pdf.set_index("doc_id")
-                out["payload_score"] = out["doc_id"].map(hm["score"])
-                out["n_spans"] = (
-                    out["doc_id"].map(hm["n_spans"]).fillna(0).astype("int32")
-                )
-                out["matched"] = out["doc_id"].isin(hm.index)
-                if want_lucene:
-                    out["sloppy_freq"] = out["doc_id"].map(hm["sloppy_freq"])
-                else:
-                    out["sloppy_freq"] = np.nan
-                yield out[
-                    [
-                        "doc_id", "payload_score", "n_spans", "matched",
-                        "dl", "tf_tokens", "tf_counts", "sloppy_freq",
-                        "dl_norm",
-                    ]
-                ]
-
-        stats = track_cached(narrow.mapInPandas(
-            run_stats, schema=SPAN_STATS_SCHEMA
-        ).persist(StorageLevel.MEMORY_AND_DISK))
-        if want_lucene:
-            hits = _compose_from_stats_lucene(
-                stats, terms, float(params.boost), prefix=phrase_prefix
-            )
-        else:
-            hits = _compose_from_stats(stats, float(params.boost))
-        if top_k is not None:
-            hits = hits.orderBy(F.desc("score"), "doc_id").limit(top_k)
-        return hits
 
     # JVM-side candidate prefilter: ONE substring probe on the longest query
     # term (a superset of token equality — the bare token prefixes each pipe
@@ -1205,7 +952,7 @@ def match_lattice(
     # would re-evaluate the document-reconstruction chain once per Contains:
     # Catalyst collapses the projection into the (interpreted, HOF-bearing)
     # Filter, so a k-term query rebuilt each doc's text k times in the scan
-    # stage (r01 PLANS.md).  The Python matcher verifies ALL terms anyway —
+    # stage.  The Python matcher verifies ALL terms anyway —
     # a doc missing any term yields no postings — so the single-probe filter
     # is correctness-neutral and evaluates the concat chain exactly once.
     #
@@ -1217,10 +964,12 @@ def match_lattice(
     # carries).  With a transforming chain the prefilter must be skipped.
     # Multi-phrase slots can't anchor the probe (the doc may contain any
     # alternative) — probe the longest SINGLE-term slot, or skip when
-    # every slot is a multi.
+    # every slot is a multi.  Composed scoring skips it: corpus statistics
+    # cover every document.
     single_terms = [t for t in terms if isinstance(t, str)]
     if (
-        not set(config.effective_follow_on()) - {"lowercase"}
+        not composed
+        and not set(config.effective_follow_on()) - {"lowercase"}
         and single_terms
     ):
         probe = max(single_terms, key=len).lower()
@@ -1228,47 +977,58 @@ def match_lattice(
             F.lower(F.concat_ws(" ", F.col("values"))).contains(probe)
         )
 
-    want_lucene = (
-        params.include_span_score and params.similarity == "lucene"
-    )
+    kernel = (terms, slop, params.in_order, params.payload_function,
+              params.payload_length_norm_factor, dtype)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             toks = tokenize_pandas(pdf["doc_id"], pdf["values"], config)
-            yield match_tokens_pandas(
-                toks, terms, slop, in_order, pf, ln, dtype,
-                prefix_last=phrase_prefix, explain=explain,
-                with_freq=want_lucene,
+            if not composed:
+                yield match_tokens_pandas(
+                    toks, *kernel, prefix_last=phrase_prefix, explain=explain
+                )
+                continue
+            out = span_stats_pandas(
+                toks, pdf["doc_id"], *kernel, prefix_last=phrase_prefix,
+                explain=explain,
             )
+            # this kernel sees every token of its documents, so it also
+            # supplies their lengths
+            doc = out["doc_id"]
+            positional = toks[toks["pos_inc"].to_numpy() > 0]
+            for col, rows in (("dl", toks), ("dl_norm", positional)):
+                sizes = rows.groupby("doc_id").size()
+                out[col] = doc.map(sizes).fillna(0).astype("int64")
+            yield out
 
-    schema = _hits_output_schema(explain, with_freq=want_lucene)
-    hits = narrow.mapInPandas(run, schema=schema)
-    if params.include_span_score:
-        # only reachable with explain=True (the default composed path is
-        # the single-pass kernel above): two-pass so the explain arrays
-        # survive composition
-        from full_lattice_search_spark.functions.tokenizer import (
-            lattice_tokenize,
+    if composed:
+        stats = _persisted(narrow.mapInPandas(
+            run, schema=_kernel_schema(SPAN_STATS_SCHEMA, explain, doclen=True)
+        ))
+        hits = _compose(
+            stats.drop("dl", "dl_norm"),
+            stats.selectExpr("doc_id", "dl", "dl_norm"),
+            terms, params, phrase_prefix,
         )
-
-        tokens = lattice_tokenize(docs, config, doc_id_col=doc_id_col,
-                                  spans_col=spans_col)
-        if want_lucene:
-            hits = _compose_lucene_tokens(
-                hits, tokens, terms, float(params.boost),
-                prefix=phrase_prefix,
-            )
-        else:
-            hits = _compose_score(
-                hits, tokens, terms, params, phrase_prefix
-            )
-    elif params.boost != 1.0:
-        hits = hits.withColumn(
-            "score", F.col("score") * F.lit(float(params.boost))
+    else:
+        hits = _boosted(
+            narrow.mapInPandas(
+                run, schema=_kernel_schema(HITS_SCHEMA, explain)
+            ),
+            params,
         )
     if top_k is not None:
         hits = hits.orderBy(F.desc("score"), "doc_id").limit(top_k)
     return hits
+
+
+def _boosted(hits: DataFrame, params: MatchLatticeParams) -> DataFrame:
+    """Payload-only scoring: the builder ``boost`` scales the score."""
+    if params.boost == 1.0:
+        return hits
+    return hits.withColumn(
+        "score", F.col("score") * F.lit(float(params.boost))
+    )
 
 
 def match_lattice_tokens(
@@ -1286,13 +1046,27 @@ def match_lattice_tokens(
     vocab: DataFrame | None = None,
 ) -> DataFrame:
     """Token-table match: ``token IN terms`` filter (pushed down to the
-    scan) → shuffle by doc_id → per-doc span DP via ``applyInPandas``.
+    scan) → shuffle by doc_id → per-doc span DP via ``mapInPandas``.
 
     Use when the token stream is pre-materialized (the engine's "index").
     If the token table is bucketed/partitioned by doc_id the exchange
     disappears entirely.  The reference-default ``include_span_score=True``
-    multiplies in the engine-native BM25 similarity computed from the same
-    token table (the index-statistics analog).
+    multiplies in the similarity computed from the same token table (the
+    index-statistics analog): the kernel emits the per-doc stats rows of
+    every candidate document (``span_stats_pandas``), the operator
+    persists them like ``match_lattice`` does (O(candidate docs)), and
+    ``_compose`` reads them with the document lengths.
+
+    ``doclen``: precomputed (doc_id, dl[, dl_norm]) statistics table (the
+    materialized index writes one).  Required when ``tokens`` is a pruned
+    view: per-doc lengths can't be recovered from pruned postings, while
+    per-term df CAN (a term's postings all live in its own bucket).
+    Without it the lengths are aggregated from ``tokens``.
+
+    ``vocab``: precomputed (token, df) term dictionary (the index writes
+    one at ``{path}_vocab``).  When given, ``similarity='lucene'`` takes
+    its dfs from it — required for ``phrase_prefix`` over a pruned view
+    (the expansion vocabulary spans buckets the view may not include).
 
     Semantics note: with ``zero_terms_query='all'`` this path returns only
     documents that produced at least one token (all-media documents are not
@@ -1314,10 +1088,9 @@ def match_lattice_tokens(
             tokens.select(F.col("doc_id").cast("string")).distinct(), params
         )
 
-    want_lucene = (
-        params.include_span_score and params.similarity == "lucene"
-    )
-    if want_lucene:
+    composed = params.include_span_score
+    lucene = composed and params.similarity == "lucene"
+    if lucene:
         if phrase_prefix and doclen is not None and vocab is None:
             raise ValueError(
                 "similarity='lucene' with phrase_prefix over a pruned "
@@ -1334,14 +1107,7 @@ def match_lattice_tokens(
                 "write_token_index"
             )
 
-    in_order, pf, ln = params.in_order, params.payload_function, (
-        params.payload_length_norm_factor
-    )
-
-    pred = F.col("token").isin(_flat_terms(terms))
-    if phrase_prefix:
-        pred = pred | F.col("token").startswith(terms[-1])
-    cand = tokens.filter(pred).select(
+    cand = tokens.filter(candidate_pred(terms, phrase_prefix)).select(
         "doc_id", "token", "abs_pos", "score", "seq"
     )
 
@@ -1363,6 +1129,19 @@ def match_lattice_tokens(
             "doc_id", "abs_pos", "seq"
         )
 
+    kernel = (terms, slop, params.in_order, params.payload_function,
+              params.payload_length_norm_factor, dtype)
+
+    def step(pdf: pd.DataFrame) -> pd.DataFrame:
+        if composed:
+            return span_stats_pandas(
+                pdf, pdf["doc_id"].unique(), *kernel,
+                prefix_last=phrase_prefix, explain=explain,
+            )
+        return match_tokens_pandas(
+            pdf, *kernel, prefix_last=phrase_prefix, explain=explain
+        )
+
     def run(batches) -> "pd.DataFrame":
         carry: pd.DataFrame | None = None
         for pdf in batches:
@@ -1375,32 +1154,25 @@ def match_lattice_tokens(
             carry = pdf[tail_mask]
             head = pdf[~tail_mask]
             if len(head):
-                yield match_tokens_pandas(
-                    head, terms, slop, in_order, pf, ln, dtype,
-                    prefix_last=phrase_prefix, explain=explain,
-                    with_freq=want_lucene,
-                )
+                yield step(head)
         if carry is not None and len(carry):
-            yield match_tokens_pandas(
-                carry, terms, slop, in_order, pf, ln, dtype,
-                prefix_last=phrase_prefix, explain=explain,
-                with_freq=want_lucene,
-            )
+            yield step(carry)
 
-    schema = _hits_output_schema(explain, with_freq=want_lucene)
-    hits = cand.mapInPandas(run, schema=schema)
-    if want_lucene:
-        hits = _compose_lucene_tokens(
-            hits, tokens, terms, float(params.boost), doclen=doclen,
-            prefix=phrase_prefix, vocab=vocab,
-        )
-    elif params.include_span_score:
-        hits = _compose_score(
-            hits, tokens, terms, params, phrase_prefix, doclen=doclen
-        )
-    elif params.boost != 1.0:
-        hits = hits.withColumn(
-            "score", F.col("score") * F.lit(float(params.boost))
+    if composed:
+        if doclen is None:
+            doclen = tokens.groupBy("doc_id").agg(
+                F.expr("count(1) AS dl"),
+                *([F.expr("sum(CAST(pos_inc > 0 AS BIGINT)) AS dl_norm")]
+                  if lucene else []),
+            )
+        stats = _persisted(cand.mapInPandas(
+            run, schema=_kernel_schema(SPAN_STATS_SCHEMA, explain)
+        ))
+        hits = _compose(stats, doclen, terms, params, phrase_prefix, vocab)
+    else:
+        hits = _boosted(
+            cand.mapInPandas(run, schema=_kernel_schema(HITS_SCHEMA, explain)),
+            params,
         )
     if top_k is not None:
         hits = hits.orderBy(F.desc("score"), "doc_id").limit(top_k)

@@ -21,7 +21,6 @@ independent oracle, not a golden constant.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from full_lattice_search_spark.sources.catalog import read_parquet
 
@@ -125,15 +124,13 @@ def lattice_docs(
     if where is not None:
         docs = docs.filter(where)
     docs = scan_parallel(docs, spark, size_path=path)
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.expr(
-            "array(named_struct("
-            "'kind', 'text', "
-            f"'text', concat_ws(' ', {records_expr(n_tokens)}), "
-            "'media_ref', cast(null as string), "
-            "'offset', 0))"
-        ).alias("spans"),
+    return docs.selectExpr(
+        "CAST(doc_id AS STRING) AS doc_id",
+        "array(named_struct("
+        "'kind', 'text', "
+        f"'text', concat_ws(' ', {records_expr(n_tokens)}), "
+        "'media_ref', cast(null as string), "
+        "'offset', 0)) AS spans",
     )
 
 

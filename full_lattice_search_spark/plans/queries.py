@@ -301,10 +301,10 @@ def q_match_lucene_sim(spark, sf_dir):
         ),
         dtype=np.float64,
     )
-    return hits.select(
+    return hits.selectExpr(
         "doc_id",
-        F.col("n_spans").cast("long").alias("n_spans"),
-        F.round("similarity", 6).alias("similarity"),
+        "CAST(n_spans AS BIGINT) AS n_spans",
+        "round(similarity, 6) AS similarity",
     )
 
 
@@ -431,10 +431,10 @@ def q_match_lucene_prefix(spark, sf_dir):
         dtype=np.float64,
         phrase_prefix=True,
     )
-    return hits.select(
+    return hits.selectExpr(
         "doc_id",
-        F.col("n_spans").cast("long").alias("n_spans"),
-        F.round("similarity", 6).alias("similarity"),
+        "CAST(n_spans AS BIGINT) AS n_spans",
+        "round(similarity, 6) AS similarity",
     )
 
 
@@ -467,10 +467,10 @@ def q_match_lucene_prefix_indexed(spark, sf_dir):
         phrase_prefix=True,
         dtype=np.float64,
     )
-    return hits.select(
+    return hits.selectExpr(
         "doc_id",
-        F.col("n_spans").cast("long").alias("n_spans"),
-        F.round("similarity", 6).alias("similarity"),
+        "CAST(n_spans AS BIGINT) AS n_spans",
+        "round(similarity, 6) AS similarity",
     )
 
 
@@ -508,9 +508,9 @@ def _doclen_jvm(spark, sf_dir, n_tokens: int = 24) -> DataFrame:
     (guide §2.3: shuffle/compute metadata, not payloads); equivalence is
     oracle-checked hash-exact at every SF."""
     docs = _read(spark, sf_dir, "documents")
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.expr(f"size(slice(split(text, ' '), 1, {n_tokens}))").alias("dl"),
+    return docs.selectExpr(
+        "CAST(doc_id AS STRING) AS doc_id",
+        f"size(slice(split(text, ' '), 1, {n_tokens})) AS dl",
     )
 
 
@@ -988,23 +988,14 @@ def q_match_span_score(spark, sf_dir):
     (LatticePayloadScoreQuery.java:333-339).  Components are rounded
     before the product so the DuckDB recomputation is bit-deterministic.
 
-    Physical shape (r06): the BM25 composition references the token table
-    from three subtrees (span DP, tf, df) and needed a fourth for doclen —
-    each one re-ran the Python tokenize stage.  Now doclen is a pure-JVM
-    projection (``_doclen_jvm``) and the candidate postings (the
-    ``token = 'table'`` filter output, O(matching tokens) rows) are
-    persisted once and feed all three subtrees: ONE tokenize execution
-    per run instead of four.  Same operators, same floats — the persisted
-    frame is an intra-query intermediate, recomputed from parquet on
-    every invocation."""
+    Physical shape: doclen is a pure-JVM projection (``_doclen_jvm``) and
+    the operator persists the kernel's per-doc stats frame, which feeds
+    both the tf/df side and the hits: ONE tokenize execution per run.
+    The persisted frame is an intra-query intermediate, recomputed from
+    parquet on every invocation."""
     toks = _tokens(spark, sf_dir, where=_contains_probe(["table"]))
-    cand = track_cached(
-        toks.filter(F.col("token").isin(["table"]))
-        .select("doc_id", "token", "abs_pos", "score", "seq")
-        .persist()
-    )
     hits = match_lattice_tokens(
-        cand,
+        toks,
         "table",
         LatticeConfig(),
         MatchLatticeParams(slop=0, include_span_score=True),
@@ -1012,12 +1003,10 @@ def q_match_span_score(spark, sf_dir):
         doclen=_doclen_jvm(spark, sf_dir),
         assume_doc_clustered=True,
     )
-    return hits.select(
+    return hits.selectExpr(
         "doc_id",
-        F.round(
-            F.round("payload_score", 4) * F.round("similarity", 6), 4
-        ).alias("score"),
-        F.col("n_spans").cast("long").alias("n_spans"),
+        "round(round(payload_score, 4) * round(similarity, 6), 4) AS score",
+        "CAST(n_spans AS BIGINT) AS n_spans",
     )
 
 
@@ -1537,11 +1526,12 @@ def q_bm25(spark, sf_dir):
     from full_lattice_search_spark.operators.bm25 import bm25_scores
 
     # doclen as a JVM projection + one persisted candidate-postings frame
-    # feeding both the tf and df aggregations: one tokenize execution
-    # instead of three (see q_match_span_score)
+    # under the tf rows: the df side is derived from them, but without the
+    # persist the tokenize exchange is not reused and the tokenizer runs
+    # over every row twice
     toks = _tokens(spark, sf_dir, where=_contains_probe([["table", "stream"]]))
     cand = track_cached(
-        toks.filter(F.col("token").isin(["table", "stream"]))
+        toks.where("token IN ('table', 'stream')")
         .select("doc_id", "token")
         .persist()
     )

@@ -49,27 +49,23 @@ HITS_SCHEMA = T.StructType(
     ]
 )
 
-# Single-pass doc-scan composed scoring (include_span_score=True): per-doc
-# row carrying BOTH the payload-score hit fields and the corpus-statistics
-# raw material (document length, per-query-term term frequencies) so BM25
-# composes from the same tokenize pass that matched — never a second
-# tokenize of the corpus.  tf_tokens/tf_counts are parallel arrays (bounded
-# by the query's term count + prefix expansions — a handful of entries, not
-# per-span structures).
+# Composed scoring (include_span_score=True): the per-doc stats row every
+# matching kernel emits (operators.match.span_stats_pandas) and the one
+# composer reads — the payload-score hit fields plus the similarity's raw
+# material from the same pass that matched: the document's candidate-term
+# frequencies as parallel tf_tokens/tf_counts arrays (bounded by the
+# query's term count + prefix expansions — a handful of entries, not
+# per-span structures) and the float32 Lucene sloppy span frequency.
+# Kernels append the explain arrays when asked and, when they see every
+# token of a document, its lengths (dl, dl_norm).
 SPAN_STATS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("payload_score", T.DoubleType(), True),
         T.StructField("n_spans", T.IntegerType(), False),
-        T.StructField("matched", T.BooleanType(), False),
-        T.StructField("dl", T.LongType(), False),
         T.StructField("tf_tokens", T.ArrayType(T.StringType()), True),
         T.StructField("tf_counts", T.ArrayType(T.LongType()), True),
-        # Lucene-flavor raw material (similarity="lucene"): float32 sloppy
-        # span frequency; overlap-discounted document length (posinc>0
-        # tokens only — what a Lucene norm stores before quantization)
         T.StructField("sloppy_freq", T.DoubleType(), True),
-        T.StructField("dl_norm", T.LongType(), False),
     ]
 )
 

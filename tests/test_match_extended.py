@@ -108,34 +108,52 @@ def test_bm25_scores_independent_of_token_layout(spark):
     tokens.unpersist()
 
 
-def test_idf_literal_cap_falls_back_to_join(spark, monkeypatch):
-    """Over the literal cap the composed doc-scan scoring switches to the
-    relational join on the df frame — same scores (float64 summation
-    order aside).  A short prefix expands to many candidate tokens, which
-    is exactly the case the literal map cannot absorb at scale."""
-    import full_lattice_search_spark.operators.match as m
-    from full_lattice_search_spark.datagen import synth_documents
+def test_phrase_prefix_beyond_4096_expansions_equals_bm25_scores(spark):
+    """A short prefix can expand to more candidate tokens than a plan
+    should inline as literals; the composed doc-scan scoring keeps the
+    idf side relational, so its similarity is exactly ``bm25_scores``
+    over the same tokens, however many the expansion holds."""
+    from full_lattice_search_spark.functions.tokenizer import lattice_tokenize
+    from full_lattice_search_spark.operators.match import (
+        composed_cache_scope,
+        match_lattice,
+    )
+    from full_lattice_search_spark.schema import DOCUMENTS_SCHEMA
 
-    docs = synth_documents(spark, 50, seed=13, mega_every=0).cache()
+    n_docs, width = 120, 40
+    rows = []
+    for d in range(n_docs):
+        words = (["alpha"] if d % 3 else []) + [
+            f"zq{d * width + j:05d}" for j in range(width)
+        ] + ["zq00000"]
+        text = " ".join(f"{w}|{i}|0|0.{1 + (d + i) % 9}"
+                        for i, w in enumerate(words))
+        rows.append((f"d{d:03d}", [("text", text, None, 0)]))
+    docs = spark.createDataFrame(rows, DOCUMENTS_SCHEMA).cache()
+    tokens = lattice_tokenize(docs, LatticeConfig()).cache()
+    expansions = tokens.filter("token LIKE 'zq%'").select("token").distinct()
+    assert expansions.count() > 4096
+
     params = MatchLatticeParams(slop=3, include_span_score=True)
-
-    def run():
-        return {
-            r["doc_id"]: (
-                round(r["score"], 6),
-                r["n_spans"],
-                round(r["similarity"], 6),
-            )
-            for r in m.match_lattice(
-                docs, "the q", LatticeConfig(), params, phrase_prefix=True
+    with composed_cache_scope():
+        hits = {
+            r["doc_id"]: r
+            for r in match_lattice(
+                docs, "alpha zq", LatticeConfig(), params, phrase_prefix=True
             ).collect()
         }
-
-    via_literals = run()
-    monkeypatch.setattr(m, "_MAX_IDF_LITERALS", 1)
-    via_join = run()
-    assert via_join == via_literals
-    assert len(via_join) > 0
+    want = {
+        r["doc_id"]: r["bm25"]
+        for r in bm25_scores(
+            tokens, ["alpha", "zq"], prefix_last=True
+        ).collect()
+    }
+    assert len(hits) == n_docs - n_docs // 3
+    for d, r in hits.items():
+        assert r["similarity"] == want[d]
+        assert r["score"] == r["payload_score"] * r["similarity"]
+    tokens.unpersist()
+    docs.unpersist()
 
 
 # ---------------------------------------------------------------------------

@@ -1,12 +1,16 @@
 """Query-builder hygiene (plans/queries.py): the raw-text candidate probe
 refuses what it cannot prefilter soundly, every frame a builder persists
 is released by the composed-cache scope, building a query over an
-already-read table launches no Spark job, and the scan-parallelism guard
-decides from the file's splits and row groups."""
+already-read table launches no Spark job, building a composed entry
+stays within its py4j budget, and the scan-parallelism guard decides
+from the file's splits and row groups."""
 
 from __future__ import annotations
 
+import collections
+import gc
 import os
+import time
 
 import numpy as np
 import pyarrow as pa
@@ -175,3 +179,57 @@ def test_first_span_entries_survive_an_empty_document(spark, empty_doc_dir,
     (ANSI INVALID_ARRAY_INDEX) when the extraction keeps no span."""
     rows = QUERIES[name](spark, empty_doc_dir).collect()
     assert len(rows) == 4
+
+
+def _build_round_trips(spark, count_py4j, build) -> int:
+    """py4j round trips the driver sends while ``build`` runs.  py4j
+    releases a JVM object from a finalizer thread at an arbitrary moment
+    after its Python proxy dies; releases are held back until the count
+    is taken (and the cycle collector is off), so the count is the
+    builder's own calls and does not depend on that thread's timing."""
+    client = spark.sparkContext._gateway._gateway_client
+    pending = client.finalizer_deque
+    gc.collect()
+    for _ in range(500):
+        if not pending:
+            break
+        time.sleep(0.01)
+    held = collections.deque()
+    client.finalizer_deque = held
+    gc.disable()
+    try:
+        _, n = count_py4j(build)
+    finally:
+        gc.enable()
+        client.finalizer_deque = pending
+        pending.extendleft(reversed(held))
+    return n
+
+
+# py4j round trips to build each composed entry on the fixture above,
+# warm, as this test counted them before the scoring composition became
+# one SQL-text composer: match_span_score 1,179, bm25 954, match_lucene_sim
+# 432.  The ceiling is half of each.
+PLAN_BUDGET = {"match_span_score": 589, "bm25": 477, "match_lucene_sim": 216}
+
+
+@pytest.mark.parametrize("name", sorted(PLAN_BUDGET))
+def test_composed_plan_build_budget(spark, sf_dir, count_py4j, name):
+    with composed_cache_scope():
+        QUERIES[name](spark, sf_dir)
+        n = _build_round_trips(
+            spark, count_py4j, lambda: QUERIES[name](spark, sf_dir)
+        )
+    assert n <= PLAN_BUDGET[name]
+
+
+COMPOSED = ["match_span_score", "bm25", "match_lucene_sim",
+            "match_lucene_prefix", "match_lucene_prefix_indexed"]
+
+
+@pytest.mark.parametrize("name", COMPOSED)
+def test_composed_entry_leaves_no_cached_frame(spark, sf_dir, name):
+    spark.catalog.clearCache()
+    with composed_cache_scope():
+        assert QUERIES[name](spark, sf_dir).count() > 0
+    assert cache_empty(spark)

@@ -11,10 +11,15 @@ import pytest
 from full_lattice_search_spark.config import LatticeConfig, MatchLatticeParams
 from full_lattice_search_spark.functions.tokenizer import lattice_tokenize
 from full_lattice_search_spark.operators.match import (
+    composed_cache_scope,
     match_lattice,
     match_lattice_tokens,
 )
 from full_lattice_search_spark.schema import DOCUMENTS_SCHEMA
+from full_lattice_search_spark.sources.token_index import (
+    match_lattice_indexed,
+    write_token_index,
+)
 
 DOC1 = "quick|0|0|0.6 brown|1|0|0.7 fox|2|0|0.5 brown|3|0|0.2"
 DOC2 = "how|0|0|0.6 now|1|0|0.7 brown|2|0|0.5 cow|3|0|0.9"
@@ -71,21 +76,48 @@ def test_include_span_score_multiplies_bm25(docs):
     assert composed["doc1"]["similarity"] > composed["doc2"]["similarity"]
 
 
-def test_both_paths_compose_identically(spark, docs):
+@pytest.fixture(scope="module")
+def index_path(docs, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("compose_index") / "tokens")
+    write_token_index(docs, path, LatticeConfig())
+    return path
+
+
+@pytest.mark.parametrize("explain", [False, True])
+@pytest.mark.parametrize("phrase_prefix", [False, True])
+@pytest.mark.parametrize("similarity", ["engine", "lucene"])
+def test_both_paths_compose_identically(
+    spark, docs, index_path, similarity, phrase_prefix, explain
+):
+    """Doc scan, token table and token index compose through one composer:
+    every path returns the same rows, bit for bit."""
+    query = "br" if phrase_prefix else "brown"
+    params = MatchLatticeParams(similarity=similarity)
+    cols = ["doc_id", "score", "n_spans", "payload_score", "similarity"]
+    if explain:
+        cols += ["span_start", "span_end", "span_score"]
+
+    def rows(hits, cols=cols):
+        return sorted(tuple(r[c] for c in cols) for r in hits.collect())
+
     toks = lattice_tokenize(docs, LatticeConfig()).cache()
-    via_tokens = _by_doc(
-        match_lattice_tokens(toks, "brown", LatticeConfig(),
-                             MatchLatticeParams()).collect()
-    )
-    via_docs = _by_doc(
-        match_lattice(docs, "brown", LatticeConfig(),
-                      MatchLatticeParams()).collect()
-    )
-    assert set(via_tokens) == set(via_docs)
-    for d in via_tokens:
-        assert via_tokens[d]["score"] == pytest.approx(
-            via_docs[d]["score"], rel=1e-12
-        )
+    with composed_cache_scope():
+        via_docs = rows(match_lattice(
+            docs, query, LatticeConfig(), params,
+            phrase_prefix=phrase_prefix, explain=explain,
+        ))
+        via_tokens = rows(match_lattice_tokens(
+            toks, query, LatticeConfig(), params,
+            phrase_prefix=phrase_prefix, explain=explain,
+        ))
+        via_index = rows(match_lattice_indexed(
+            spark, index_path, query, LatticeConfig(), params,
+            phrase_prefix=phrase_prefix,
+        ), cols[:5])
+    toks.unpersist()
+    assert [r[0] for r in via_docs] == ["doc1", "doc2"]
+    assert via_tokens == via_docs
+    assert via_index == [r[:5] for r in via_docs]
 
 
 def test_boost_scales_score(docs):
