@@ -4,8 +4,9 @@ Designed for multi-executor clusters:
 
     spark-submit --py-files fls.zip -m ...  # via scripts/submit.py
 
-The session builder sets nothing master-specific — master/executors come
-from spark-submit flags, so the same job runs on local[N], YARN, or K8s.
+The session sets nothing master-specific (``build_session`` with no core
+count) — master/executors come from spark-submit flags, so the same job
+runs on local[N], YARN, or K8s.
 """
 
 from __future__ import annotations
@@ -82,15 +83,9 @@ def build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from full_lattice_search_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.appName(f"fls-{args.cmd}")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = build_session(f"fls-{args.cmd}")
 
     from full_lattice_search_spark.config import LatticeConfig, MatchLatticeParams
 

@@ -128,42 +128,6 @@ def _ordered_matches(
     )
 
 
-def _unordered_matches(
-    plists: list[tuple[np.ndarray, np.ndarray]], slop: int
-) -> tuple[np.ndarray, np.ndarray, list[np.ndarray]]:
-    """NearSpansUnordered analog: enumerate candidate windows by advancing
-    the minimum-start term pointer (heap-free k-way walk); match when the
-    covering window satisfies ``(max_end - min_start) - k <= slop``.
-
-    Sequential reference implementation — kept as the equivalence oracle
-    for ``_unordered_matches_vec`` (property-tested); the engine's hot path
-    uses the vectorized form."""
-    k = len(plists)
-    if k == 1:
-        p1, s1 = plists[0]
-        return p1, p1 + 1, [s1]
-    ptrs = [0] * k
-    lens = [len(p) for p, _ in plists]
-    starts_out, ends_out = [], []
-    scores_out: list[list[float]] = [[] for _ in range(k)]
-    while all(ptrs[i] < lens[i] for i in range(k)):
-        cur = [plists[i][0][ptrs[i]] for i in range(k)]
-        lo = min(cur)
-        hi = max(cur)
-        if (hi + 1 - lo) - k <= slop:
-            starts_out.append(lo)
-            ends_out.append(hi + 1)
-            for i in range(k):
-                scores_out[i].append(plists[i][1][ptrs[i]])
-        i_min = int(np.argmin(cur))
-        ptrs[i_min] += 1
-    return (
-        np.asarray(starts_out, dtype=np.int64),
-        np.asarray(ends_out, dtype=np.int64),
-        [np.asarray(s, dtype=np.float32) for s in scores_out],
-    )
-
-
 def _unordered_matches_vec(
     plists: list[tuple[np.ndarray, np.ndarray]], slop: int
 ) -> tuple[np.ndarray, np.ndarray, list[np.ndarray]]:
@@ -185,8 +149,8 @@ def _unordered_matches_vec(
     a document boundary exceed the slop by construction and mask out.
     Results are re-sorted to the sequential walk's emission order
     (position, term index, duplicate order) so downstream float folds see
-    the same accumulation order.  Property-tested against
-    ``_unordered_matches``.
+    the same accumulation order.  Property-tested against the sequential
+    walk in ``tests/test_properties.py``.
     """
     k = len(plists)
     if k == 1:
@@ -275,23 +239,6 @@ def _span_scores(
         width = (ends - starts).astype(dtype)
         base = base - np.log(width * dtype(len_norm))
     return np.exp(base)
-
-
-def _doc_score(span_scores: np.ndarray, payload_function: str, dtype: type) -> float:
-    """A3-A6: combine span scores into the doc score; zero spans → MIN_SCORE
-    (guarded by the caller); negative → 0 (A8)."""
-    if len(span_scores) == 0:
-        return float(MIN_SCORE)
-    if payload_function == "sum":
-        out = span_scores.sum(dtype=dtype)
-    elif payload_function == "max":
-        out = span_scores.max()
-    else:  # min — reference seeds with first span (cur==0 ? s : min)
-        out = span_scores.min()
-    out = float(out)
-    if np.isnan(out) or out < 0:
-        return 0.0
-    return out
 
 
 _EMPTY_HITS = pd.DataFrame(
@@ -584,43 +531,6 @@ def span_stats_pandas(
     return out
 
 
-def _unordered_matches_by_doc(
-    plists: list[tuple[np.ndarray, np.ndarray]], slop: int
-) -> tuple[np.ndarray, np.ndarray, list[np.ndarray], np.ndarray]:
-    """Sequential unordered walk over doc-encoded positions, one document
-    slice at a time.  Superseded by ``_unordered_matches_vec`` on the hot
-    path; retained as the equivalence oracle for the property test."""
-    k = len(plists)
-    doc_sets = [np.unique(p // _DOC_STRIDE) for p, _ in plists]
-    docs = doc_sets[0]
-    for d in doc_sets[1:]:
-        docs = np.intersect1d(docs, d, assume_unique=True)
-    starts_all, ends_all, docs_all = [], [], []
-    scores_all: list[list[np.ndarray]] = [[] for _ in range(k)]
-    for d in docs:
-        sub = []
-        for p, s in plists:
-            lo = np.searchsorted(p, d * _DOC_STRIDE, side="left")
-            hi = np.searchsorted(p, (d + 1) * _DOC_STRIDE, side="left")
-            sub.append((p[lo:hi] - d * _DOC_STRIDE, s[lo:hi]))
-        st, en, sc = _unordered_matches(sub, slop)
-        if len(st):
-            starts_all.append(st + d * _DOC_STRIDE)
-            ends_all.append(en + d * _DOC_STRIDE)
-            docs_all.append(np.full(len(st), d, dtype=np.int64))
-            for i in range(k):
-                scores_all[i].append(sc[i])
-    if not starts_all:
-        empty = np.array([], dtype=np.int64)
-        return empty, empty, [np.array([], dtype=np.float32)] * k, empty
-    return (
-        np.concatenate(starts_all),
-        np.concatenate(ends_all),
-        [np.concatenate(s).astype(np.float32) for s in scores_all],
-        np.concatenate(docs_all),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Spark plans
 # ---------------------------------------------------------------------------
@@ -871,6 +781,54 @@ def _persisted(stats: DataFrame) -> DataFrame:
     return track_cached(stats.persist(StorageLevel.MEMORY_AND_DISK))
 
 
+def _doc_local(
+    tokens: DataFrame, pred, assume_doc_clustered: bool
+) -> DataFrame:
+    """The ``pred``-selected postings of a token table, each document's
+    rows contiguous and sorted by (abs_pos, seq) within one partition.
+
+    One hash exchange co-locates each doc's candidate rows; the sort makes
+    them contiguous so mapInPandas can process thousands of docs per Arrow
+    batch (a per-doc applyInPandas would pay one UDF call per document);
+    ``_whole_docs`` re-cuts the batches at document boundaries.
+
+    ``assume_doc_clustered``: the caller guarantees each document's rows
+    are already contiguous-and-sorted within one input split (a table
+    written ``bucketBy(n, doc_id).sortBy(doc_id, abs_pos, seq)``, or an
+    Iceberg table with a doc_id bucket transform + sort order) — the
+    exchange AND the sort disappear; the match becomes a pure scan →
+    ArrowEval map, the zero-shuffle index path at 100 TB."""
+    cand = tokens.filter(pred).select(
+        "doc_id", "token", "abs_pos", "score", "seq"
+    )
+    if not assume_doc_clustered:
+        n_part = tokens.sparkSession.sparkContext.defaultParallelism
+        cand = cand.repartition(n_part, "doc_id").sortWithinPartitions(
+            "doc_id", "abs_pos", "seq"
+        )
+    return cand
+
+
+def _whole_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The Arrow batches of a ``_doc_local`` partition, re-cut so that no
+    document spans two of them: Arrow may split a partition mid-document,
+    so each batch's trailing document is carried over to the next."""
+    carry: pd.DataFrame | None = None
+    for pdf in batches:
+        if carry is not None and len(carry):
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        if len(pdf) == 0:
+            continue
+        last_doc = pdf["doc_id"].iloc[-1]
+        tail_mask = pdf["doc_id"] == last_doc
+        carry = pdf[tail_mask]
+        head = pdf[~tail_mask]
+        if len(head):
+            yield head
+    if carry is not None and len(carry):
+        yield carry
+
+
 def match_lattice(
     docs: DataFrame,
     query: str,
@@ -1107,27 +1065,9 @@ def match_lattice_tokens(
                 "write_token_index"
             )
 
-    cand = tokens.filter(candidate_pred(terms, phrase_prefix)).select(
-        "doc_id", "token", "abs_pos", "score", "seq"
+    cand = _doc_local(
+        tokens, candidate_pred(terms, phrase_prefix), assume_doc_clustered
     )
-
-    # One hash exchange co-locates each doc's candidate rows; the sort makes
-    # them contiguous so mapInPandas can process thousands of docs per Arrow
-    # batch (a per-doc applyInPandas would pay one UDF call per document).
-    # Arrow may still split a partition into multiple batches mid-document,
-    # so incomplete trailing docs are carried over to the next batch.
-    #
-    # ``assume_doc_clustered``: the caller guarantees each document's rows
-    # are already contiguous-and-sorted within one input split (a table
-    # written ``bucketBy(n, doc_id).sortBy(doc_id, abs_pos, seq)``, or an
-    # Iceberg table with a doc_id bucket transform + sort order) — the
-    # exchange AND the sort disappear; the match becomes a pure scan →
-    # ArrowEval map, the zero-shuffle index path at 100 TB.
-    if not assume_doc_clustered:
-        n_part = tokens.sparkSession.sparkContext.defaultParallelism
-        cand = cand.repartition(n_part, "doc_id").sortWithinPartitions(
-            "doc_id", "abs_pos", "seq"
-        )
 
     kernel = (terms, slop, params.in_order, params.payload_function,
               params.payload_length_norm_factor, dtype)
@@ -1142,21 +1082,8 @@ def match_lattice_tokens(
             pdf, *kernel, prefix_last=phrase_prefix, explain=explain
         )
 
-    def run(batches) -> "pd.DataFrame":
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            last_doc = pdf["doc_id"].iloc[-1]
-            tail_mask = pdf["doc_id"] == last_doc
-            carry = pdf[tail_mask]
-            head = pdf[~tail_mask]
-            if len(head):
-                yield step(head)
-        if carry is not None and len(carry):
-            yield step(carry)
+    def run(batches) -> Iterator[pd.DataFrame]:
+        return map(step, _whole_docs(batches))
 
     if composed:
         if doclen is None:
@@ -1331,41 +1258,21 @@ def match_lattice_many(
             return zero_hits
         return spark.createDataFrame([], schema)
 
-    cand = tokens.filter(
-        F.col("token").isin(sorted(union_terms))
-    ).select("doc_id", "token", "abs_pos", "score", "seq")
-    if not assume_doc_clustered:
-        n_part = spark.sparkContext.defaultParallelism
-        cand = cand.repartition(n_part, "doc_id").sortWithinPartitions(
-            "doc_id", "abs_pos", "seq"
-        )
+    cand = _doc_local(
+        tokens, F.col("token").isin(sorted(union_terms)), assume_doc_clustered
+    )
     in_order, pf, ln = params.in_order, params.payload_function, (
         params.payload_length_norm_factor
     )
 
-    def run_queries(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        for qid, terms, slop in analyzed:
-            out = match_tokens_pandas(
-                pdf, terms, slop, in_order, pf, ln, dtype
-            )
-            out.insert(0, "query_id", qid)
-            yield out
-
     def run(batches) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            last_doc = pdf["doc_id"].iloc[-1]
-            tail_mask = pdf["doc_id"] == last_doc
-            carry = pdf[tail_mask]
-            head = pdf[~tail_mask]
-            if len(head):
-                yield from run_queries(head)
-        if carry is not None and len(carry):
-            yield from run_queries(carry)
+        for pdf in _whole_docs(batches):
+            for qid, terms, slop in analyzed:
+                out = match_tokens_pandas(
+                    pdf, terms, slop, in_order, pf, ln, dtype
+                )
+                out.insert(0, "query_id", qid)
+                yield out
 
     matched = cand.mapInPandas(run, schema=schema)
     if zero_hits is not None:

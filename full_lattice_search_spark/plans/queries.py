@@ -1367,9 +1367,15 @@ WHERE doc_id % 7 <> 0 AND length(trim(text)) > 0
 """
 
 
+def _ntz_epoch_seconds(col: str) -> str:
+    """SQL for the epoch offset of the TIMESTAMP_NTZ column ``col`` as an
+    INTERVAL SECOND.  NTZ minus NTZ is computed without a time zone;
+    timestampdiff, unix_micros and any cast to TIMESTAMP read the session
+    zone and move a wall time inside a DST gap by the shift."""
+    return f"CAST({col} - TIMESTAMP_NTZ'1970-01-01 00:00:00' AS INTERVAL SECOND)"
+
+
 def q_events_tumbling(spark, sf_dir):
-    # ts is TIMESTAMP_NTZ; epoch math must not depend on the session tz
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _read(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -1382,7 +1388,8 @@ def q_events_tumbling(spark, sf_dir):
             .alias("sum_value"),
         )
         .select(
-            F.unix_timestamp(F.col("w.start")).cast("long").alias("bucket_ts"),
+            F.expr(f"CAST({_ntz_epoch_seconds('w.start')} AS BIGINT)")
+            .alias("bucket_ts"),
             "event_type",
             "n",
             "sum_value",
@@ -1568,16 +1575,16 @@ GROUP BY t.doc_id
 
 
 def q_events_sessionize(spark, sf_dir):
-    # ts is TIMESTAMP_NTZ; epoch math must not depend on the session tz
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from pyspark.sql import Window
 
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # microsecond-exact on both engines (unix_timestamp floors fractional
     # seconds while DuckDB's epoch() keeps them — off-by-one at boundaries)
-    ts_utc = F.col("ts").cast("timestamp")  # NTZ -> UTC (session tz)
-    gap = F.unix_micros(ts_utc) - F.unix_micros(F.lag(ts_utc).over(w))
+    us = f"CAST({_ntz_epoch_seconds('ts')} AS DECIMAL(18, 6)) * 1000000"
+    ev = _read(spark, sf_dir, "events").withColumn(
+        "us", F.expr(f"CAST({us} AS BIGINT)")
+    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gap = F.col("us") - F.lag("us").over(w)
     marked = ev.withColumn(
         "new_sess",
         F.when(
@@ -1591,8 +1598,8 @@ def q_events_sessionize(spark, sf_dir):
         marked.groupBy("user_id", "session_idx")
         .agg(
             F.count("*").cast("long").alias("n_events"),
-            F.min(F.unix_micros(F.col("ts").cast("timestamp"))).cast("long").alias("start_ts"),
-            F.max(F.unix_micros(F.col("ts").cast("timestamp"))).cast("long").alias("end_ts"),
+            F.min("us").alias("start_ts"),
+            F.max("us").alias("end_ts"),
             F.sum(F.col("value").cast("decimal(18,6)"))
             .cast("double")
             .alias("sum_value"),

@@ -34,20 +34,14 @@ def main() -> None:
     k = int(sys.argv[3]) if len(sys.argv) > 3 else 10
 
     import numpy as np
-    from pyspark.sql import SparkSession
 
     from full_lattice_search_spark.operators.similarity import (
         brute_force_topk_arrow,
         lsh_bucket_topk,
     )
+    from full_lattice_search_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session("ann-recall", cores=len(os.sched_getaffinity(0)))
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
     n_corpus = emb.count()
 

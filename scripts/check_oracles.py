@@ -2,11 +2,12 @@
 entry on Spark and its oracle_sql() on DuckDB over the same parquet tables,
 compare row-count, schema (column names), and order-insensitive values.
 
-Usage: PYTHONPATH=/root/repo python scripts/check_oracles.py [sf_dir] [name ...]
+Usage: PYTHONPATH=. python scripts/check_oracles.py [sf_dir] [name ...]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -18,6 +19,14 @@ TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
+
+
+def oracle_db(sf_dir: str):
+    """A DuckDB connection with one view per sf table."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -32,73 +41,63 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), kind="stable").reset_index(drop=True)
 
 
+def mismatch(got: pd.DataFrame, exp: pd.DataFrame) -> str | None:
+    """Why the Spark result ``got`` differs from the oracle's ``exp``
+    (both raw ``toPandas()``/``df()`` frames), or None when they are equal
+    as row multisets."""
+    got, exp = normalize(got), normalize(exp)
+    if list(got.columns) != list(exp.columns):
+        return f"columns {list(got.columns)} vs {list(exp.columns)}"
+    if len(got) != len(exp):
+        return f"rows {len(got)} vs {len(exp)}"
+    for c in got.columns:
+        g, e = got[c].to_numpy(), exp[c].to_numpy()
+        if np.issubdtype(got[c].dtype, np.floating):
+            # exact bit equality: the driver hashes values, so rounded
+            # floats must be IDENTICAL doubles on both engines
+            bad = ~((g == e) | (np.isnan(g) & np.isnan(e)))
+        else:
+            bad = g != e
+        if bad.any():
+            i = int(np.argmax(bad))
+            return f"col {c} row {i}: spark={g[i]!r} oracle={e[i]!r}"
+    return None
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
-
-    from pyspark.sql import SparkSession
+    only = sys.argv[2:]
 
     from full_lattice_search_spark.plans.queries import ORACLES, QUERIES
+    from full_lattice_search_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("check-oracles")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    unknown = [n for n in only if n not in QUERIES]
+    if unknown:
+        print(f"unknown entries: {' '.join(unknown)}")
+        return 2
+    names = only or list(QUERIES)
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    spark = build_session("check-oracles",
+                          cores=len(os.sched_getaffinity(0)),
+                          driver_memory="8g")
+    con = oracle_db(sf_dir)
 
     failures = []
-    for name, fn in QUERIES.items():
-        if only and name not in only:
-            continue
+    for name in names:
         t0 = time.time()
         try:
-            got = normalize(fn(spark, sf_dir).toPandas())
-            exp = normalize(con.sql(ORACLES[name]).df())
+            why = mismatch(QUERIES[name](spark, sf_dir).toPandas(),
+                           con.sql(ORACLES[name]).df())
         except Exception as e:
-            print(f"FAIL {name}: EXCEPTION {type(e).__name__}: {str(e)[:300]}")
-            failures.append(name)
-            continue
-        dt = time.time() - t0
-        if list(got.columns) != list(exp.columns):
-            print(f"FAIL {name}: columns {list(got.columns)} vs {list(exp.columns)}")
-            failures.append(name)
-            continue
-        if len(got) != len(exp):
-            print(f"FAIL {name}: rows {len(got)} vs {len(exp)}")
-            failures.append(name)
-            continue
-        mismatch = None
-        for c in got.columns:
-            g, e = got[c].to_numpy(), exp[c].to_numpy()
-            if np.issubdtype(got[c].dtype, np.floating):
-                # exact bit equality: the driver hashes values, so rounded
-                # floats must be IDENTICAL doubles on both engines
-                bad = ~((g == e) | (np.isnan(g) & np.isnan(e)))
-            else:
-                bad = g != e
-            if bad.any():
-                i = int(np.argmax(bad))
-                mismatch = (c, i, g[i], e[i])
-                break
-        if mismatch:
-            c, i, gv, ev = mismatch
-            print(f"FAIL {name}: col {c} row {i}: spark={gv!r} oracle={ev!r}")
+            why = f"EXCEPTION {type(e).__name__}: {str(e)[:300]}"
+        if why:
+            print(f"FAIL {name}: {why}")
             failures.append(name)
         else:
-            print(f"PASS {name}: {len(got)} rows [{dt:.1f}s]")
+            print(f"PASS {name} [{time.time() - t0:.1f}s]")
 
     spark.stop()
-    print(f"\n{len(QUERIES) - len(failures)}/{len(QUERIES)} pass")
+    print(f"\n{len(names) - len(failures)}/{len(names)} pass")
     return 1 if failures else 0
 
 

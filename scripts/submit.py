@@ -1,8 +1,8 @@
 """Launch the pipeline via spark-submit --py-files (north_rule launch mode).
 
 Zips the package, then exec's spark-submit with the CLI module.  Master
-defaults to local[32] in the sandbox; pass --master yarn / k8s:// etc. on a
-real cluster — nothing in the job is master-specific.
+defaults to local[*] (every core of this host); pass --master yarn /
+k8s:// etc. on a real cluster — nothing in the job is master-specific.
 
     python scripts/submit.py extract --input ... --output ... --checkpoint ...
     python scripts/submit.py --master local[8] datagen --output /tmp/corpus
@@ -34,7 +34,7 @@ def build_zip(dest: str) -> str:
 
 def main() -> int:
     argv = sys.argv[1:]
-    master = "local[32]"
+    master = "local[*]"
     if argv and argv[0] == "--master":
         master = argv[1]
         argv = argv[2:]

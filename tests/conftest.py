@@ -1,25 +1,19 @@
 from __future__ import annotations
 
+import collections
+import gc
+import time
 import uuid
 
 import pytest
-from pyspark.sql import SparkSession
+
+from full_lattice_search_spark.session import build_session
 
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("fls-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = build_session("fls-tests", cores=4, driver_memory="4g")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     yield spark
     spark.stop()
 
@@ -49,8 +43,13 @@ def count_jobs(spark):
 def count_py4j(spark, monkeypatch):
     """``count_py4j(fn)`` -> ``(fn(), n)``: n = the py4j commands the driver
     sent to the JVM while ``fn`` ran — each one a round trip (a JVM call,
-    an attribute read, an object release), the unit of planning cost."""
-    client = type(spark.sparkContext._gateway._gateway_client)
+    an attribute read), the unit of planning cost.  py4j releases a JVM
+    object from a finalizer thread at an arbitrary moment after its Python
+    proxy dies; releases are held back until the count is taken (and the
+    cycle collector is off), so the count is ``fn``'s own calls and does
+    not depend on that thread's timing."""
+    gateway_client = spark.sparkContext._gateway._gateway_client
+    client = type(gateway_client)
     real = client.send_command
 
     def run(fn):
@@ -61,11 +60,23 @@ def count_py4j(spark, monkeypatch):
             n += 1
             return real(self, *args, **kwargs)
 
+        pending = gateway_client.finalizer_deque
+        gc.collect()
+        for _ in range(500):
+            if not pending:
+                break
+            time.sleep(0.01)
+        held = collections.deque()
+        gateway_client.finalizer_deque = held
+        gc.disable()
         monkeypatch.setattr(client, "send_command", counted)
         try:
             out = fn()
         finally:
             monkeypatch.setattr(client, "send_command", real)
+            gc.enable()
+            gateway_client.finalizer_deque = pending
+            pending.extendleft(reversed(held))
         return out, n
 
     return run

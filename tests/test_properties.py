@@ -12,7 +12,11 @@ from hypothesis import strategies as st
 
 from full_lattice_search_spark.config import LatticeConfig
 from full_lattice_search_spark.functions.tokenizer import tokenize_pandas
-from full_lattice_search_spark.operators.match import match_tokens_pandas
+from full_lattice_search_spark.operators.match import (
+    _DOC_STRIDE,
+    _unordered_matches_vec,
+    match_tokens_pandas,
+)
 
 WORDS = ["a", "b", "c", "dd", "eee"]
 
@@ -148,19 +152,82 @@ def test_match_deterministic_across_parallelism(spark):
     assert len(results[0]) > 0
 
 
+def _unordered_matches(
+    plists: list[tuple[np.ndarray, np.ndarray]], slop: int
+) -> tuple[np.ndarray, np.ndarray, list[np.ndarray]]:
+    """NearSpansUnordered analog: enumerate candidate windows by advancing
+    the minimum-start term pointer (heap-free k-way walk); match when the
+    covering window satisfies ``(max_end - min_start) - k <= slop``.
+
+    Sequential reference implementation: the equivalence oracle for the
+    engine's vectorized ``_unordered_matches_vec``."""
+    k = len(plists)
+    if k == 1:
+        p1, s1 = plists[0]
+        return p1, p1 + 1, [s1]
+    ptrs = [0] * k
+    lens = [len(p) for p, _ in plists]
+    starts_out, ends_out = [], []
+    scores_out: list[list[float]] = [[] for _ in range(k)]
+    while all(ptrs[i] < lens[i] for i in range(k)):
+        cur = [plists[i][0][ptrs[i]] for i in range(k)]
+        lo = min(cur)
+        hi = max(cur)
+        if (hi + 1 - lo) - k <= slop:
+            starts_out.append(lo)
+            ends_out.append(hi + 1)
+            for i in range(k):
+                scores_out[i].append(plists[i][1][ptrs[i]])
+        i_min = int(np.argmin(cur))
+        ptrs[i_min] += 1
+    return (
+        np.asarray(starts_out, dtype=np.int64),
+        np.asarray(ends_out, dtype=np.int64),
+        [np.asarray(s, dtype=np.float32) for s in scores_out],
+    )
+
+
+def _unordered_matches_by_doc(
+    plists: list[tuple[np.ndarray, np.ndarray]], slop: int
+) -> tuple[np.ndarray, np.ndarray, list[np.ndarray], np.ndarray]:
+    """Sequential unordered walk over doc-encoded positions, one document
+    slice at a time."""
+    k = len(plists)
+    doc_sets = [np.unique(p // _DOC_STRIDE) for p, _ in plists]
+    docs = doc_sets[0]
+    for d in doc_sets[1:]:
+        docs = np.intersect1d(docs, d, assume_unique=True)
+    starts_all, ends_all, docs_all = [], [], []
+    scores_all: list[list[np.ndarray]] = [[] for _ in range(k)]
+    for d in docs:
+        sub = []
+        for p, s in plists:
+            lo = np.searchsorted(p, d * _DOC_STRIDE, side="left")
+            hi = np.searchsorted(p, (d + 1) * _DOC_STRIDE, side="left")
+            sub.append((p[lo:hi] - d * _DOC_STRIDE, s[lo:hi]))
+        st, en, sc = _unordered_matches(sub, slop)
+        if len(st):
+            starts_all.append(st + d * _DOC_STRIDE)
+            ends_all.append(en + d * _DOC_STRIDE)
+            docs_all.append(np.full(len(st), d, dtype=np.int64))
+            for i in range(k):
+                scores_all[i].append(sc[i])
+    if not starts_all:
+        empty = np.array([], dtype=np.int64)
+        return empty, empty, [np.array([], dtype=np.float32)] * k, empty
+    return (
+        np.concatenate(starts_all),
+        np.concatenate(ends_all),
+        [np.concatenate(s).astype(np.float32) for s in scores_all],
+        np.concatenate(docs_all),
+    )
+
+
 def test_unordered_vec_equals_sequential_walk():
     """The vectorized NearSpansUnordered enumeration must emit exactly the
     sequential min-pointer walk's matches — same spans, same per-term
     payload picks, same emission order — including duplicate positions
     (score-bucket postings) and multi-document encodings."""
-    import numpy as np
-
-    from full_lattice_search_spark.operators.match import (
-        _DOC_STRIDE,
-        _unordered_matches_by_doc,
-        _unordered_matches_vec,
-    )
-
     rng = np.random.default_rng(7)
     for trial in range(400):
         k = int(rng.integers(2, 5))

@@ -7,10 +7,7 @@ from the file's splits and row groups."""
 
 from __future__ import annotations
 
-import collections
-import gc
 import os
-import time
 
 import numpy as np
 import pyarrow as pa
@@ -181,31 +178,6 @@ def test_first_span_entries_survive_an_empty_document(spark, empty_doc_dir,
     assert len(rows) == 4
 
 
-def _build_round_trips(spark, count_py4j, build) -> int:
-    """py4j round trips the driver sends while ``build`` runs.  py4j
-    releases a JVM object from a finalizer thread at an arbitrary moment
-    after its Python proxy dies; releases are held back until the count
-    is taken (and the cycle collector is off), so the count is the
-    builder's own calls and does not depend on that thread's timing."""
-    client = spark.sparkContext._gateway._gateway_client
-    pending = client.finalizer_deque
-    gc.collect()
-    for _ in range(500):
-        if not pending:
-            break
-        time.sleep(0.01)
-    held = collections.deque()
-    client.finalizer_deque = held
-    gc.disable()
-    try:
-        _, n = count_py4j(build)
-    finally:
-        gc.enable()
-        client.finalizer_deque = pending
-        pending.extendleft(reversed(held))
-    return n
-
-
 # py4j round trips to build each composed entry on the fixture above,
 # warm, as this test counted them before the scoring composition became
 # one SQL-text composer: match_span_score 1,179, bm25 954, match_lucene_sim
@@ -217,9 +189,7 @@ PLAN_BUDGET = {"match_span_score": 589, "bm25": 477, "match_lucene_sim": 216}
 def test_composed_plan_build_budget(spark, sf_dir, count_py4j, name):
     with composed_cache_scope():
         QUERIES[name](spark, sf_dir)
-        n = _build_round_trips(
-            spark, count_py4j, lambda: QUERIES[name](spark, sf_dir)
-        )
+        _, n = count_py4j(lambda: QUERIES[name](spark, sf_dir))
     assert n <= PLAN_BUDGET[name]
 
 

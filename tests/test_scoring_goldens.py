@@ -6,12 +6,14 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pandas as pd
+import pytest
 
 from full_lattice_search_spark.config import MIN_LOG_SCORE, MIN_SCORE, SCORE_MULT
 from full_lattice_search_spark.operators.match import (
-    _doc_score,
     _fold_leaf_scores,
     _span_scores,
+    match_tokens_pandas,
 )
 
 
@@ -76,23 +78,36 @@ def test_leaf_fold_clamps_per_step():
     assert float(leaf[0]) >= MIN_LOG_SCORE - 1e-6
 
 
-def test_doc_score_zero_spans_is_min_score():
-    assert _doc_score(np.array([]), "sum", np.float32) == MIN_SCORE
+def doc_scores(payloads, payload_function, len_norm=1.0):
+    """Scores the matching kernel gives documents whose one-term spans
+    carry ``payloads`` (doc id -> list; a span scores 1e5 · payload /
+    len_norm): the doc score path, A4-A8."""
+    rows = [(d, "a", i, p) for d, ps in payloads.items()
+            for i, p in enumerate(ps)]
+    toks = pd.DataFrame(rows, columns=["doc_id", "token", "abs_pos", "score"])
+    toks["score"] = toks["score"].astype(np.float32)
+    toks["seq"] = 0
+    with np.errstate(invalid="ignore"):
+        hits = match_tokens_pandas(
+            toks, ["a"], 0, True, payload_function, len_norm, np.float64
+        )
+    return dict(zip(hits["doc_id"], hits["score"]))
 
 
 def test_doc_score_single_span_identity():
-    assert (
-        abs(_doc_score(np.array([0.12345]), "sum", np.float32) - 0.12345) < 1e-7
-    )
+    # a document none of whose tokens matches gets no hit row at all
+    got = doc_scores({"d": [0.5], "e": []}, "sum")
+    assert got == {"d": pytest.approx(50000.0, rel=1e-6)}
 
 
 def test_doc_score_max_min():
-    s = np.array([1.0, 3.0, 2.0])
-    assert _doc_score(s, "max", np.float32) == 3.0
-    assert _doc_score(s, "min", np.float32) == 1.0
-    assert _doc_score(s, "sum", np.float64) == 6.0
+    s = {"d": [0.01, 0.03, 0.02]}
+    assert doc_scores(s, "max")["d"] == pytest.approx(3000.0, rel=1e-6)
+    assert doc_scores(s, "min")["d"] == pytest.approx(1000.0, rel=1e-6)
+    assert doc_scores(s, "sum")["d"] == pytest.approx(6000.0, rel=1e-6)
 
 
 def test_doc_score_negative_and_nan_guard():
-    assert _doc_score(np.array([-5.0]), "sum", np.float64) == 0.0
-    assert _doc_score(np.array([np.nan]), "sum", np.float64) == 0.0
+    # a negative payload folds to NaN, as does a negative length norm
+    assert doc_scores({"d": [-0.5]}, "sum") == {"d": 0.0}
+    assert doc_scores({"d": [0.5]}, "sum", len_norm=-1.0) == {"d": 0.0}
