@@ -2,21 +2,23 @@
 
 Re-expresses the reference's Lucene query stack (SpanNearQuery wrapped in
 LatticePayloadScoreQuery; ``index/query/MatchLatticeQueryBuilder.java:263-347``
-and ``index/query/LatticePayloadScoreQuery.java:52-343``) as two Spark plans:
+and ``index/query/LatticePayloadScoreQuery.java:52-343``) as one doc-scan
+kernel plus one token-table entry:
 
-1. **Document-scan path** (`match_lattice`): one ``mapInPandas`` over the
-   interleaved documents table — tokenize + match + score inside a single
-   Arrow batch.  A JVM-side substring prefilter keeps non-candidate documents
-   out of Python entirely, so at 100 TB the scan stays a parallel
-   filter→project with **zero shuffles**; the only exchange is the final
-   top-k (`TakeOrderedAndProject`, per-partition k then merge — the same
-   physical shape as ES per-shard top-k + coordinator merge).
+1. **Doc-scan kernel** (``_scan_match``, behind `match_lattice` and
+   `match_lattice_many`): one ``mapInPandas`` over ``(doc_id, values)``
+   rows — tokenize + match + score inside a single Arrow batch, N queries
+   over one tokenization.  A JVM-side substring prefilter keeps
+   non-candidate documents out of Python entirely, so at 100 TB the scan
+   stays a parallel filter→project with **zero shuffles**; the only
+   exchange is the final top-k (`TakeOrderedAndProject`, per-partition k
+   then merge — the same physical shape as ES per-shard top-k +
+   coordinator merge).
 
-2. **Token-table path** (`match_lattice_tokens`): for a pre-materialized
-   token table (our "inverted index"), filter ``token IN terms`` — pushed to
-   the parquet/Iceberg scan — then one shuffle to group candidate docs and
-   ``applyInPandas`` the span DP.  Bucketing the token table by ``doc_id``
-   removes even that shuffle.
+2. **Token-table entry** (`match_lattice_tokens`): for a pre-materialized
+   token table (the index, or a user's token table), filter
+   ``token IN terms`` — pushed to the parquet/Iceberg scan — then one
+   shuffle co-locates each candidate doc's postings for the same span DP.
 
 Span-matching semantics replicate Lucene's ``NearSpansOrdered``: subspan
 iterators only move forward; for each occurrence of the first term the later
@@ -40,6 +42,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from full_lattice_search_spark.config import (
     MIN_LOG_SCORE,
@@ -258,8 +261,6 @@ def _kernel_schema(base, explain: bool, doclen: bool = False):
     or the SPAN_STATS_SCHEMA contract), then the explain arrays, then —
     for a kernel that sees every token of its documents — their lengths.
     The order mirrors the kernels' construction order."""
-    from pyspark.sql import types as T
-
     fields = list(base.fields)
     if explain:
         fields += [
@@ -273,6 +274,12 @@ def _kernel_schema(base, explain: bool, doclen: bool = False):
             T.StructField("dl_norm", T.LongType(), False),
         ]
     return T.StructType(fields)
+
+
+# a batch's hits (match_lattice_many): the query id leads HITS_SCHEMA
+_QUERY_HITS_SCHEMA = T.StructType(
+    [T.StructField("query_id", T.StringType(), False)] + HITS_SCHEMA.fields
+)
 
 
 def _empty_hits(explain: bool, with_freq: bool = False) -> pd.DataFrame:
@@ -610,9 +617,10 @@ def candidate_pred(terms: list, prefix: bool = False):
 
 
 def _zero_terms_hits(source: DataFrame, params: MatchLatticeParams) -> DataFrame:
-    """zero_terms_query='all': every doc matches with MIN_SCORE (× boost)."""
+    """zero_terms_query='all': every doc matches with MIN_SCORE (× boost).
+    ``source`` holds ``doc_id`` (led by ``query_id`` for a batch)."""
     return source.select(
-        "doc_id",
+        *source.columns,
         F.lit(float(MIN_SCORE) * params.boost).alias("score"),
         F.lit(0).alias("n_spans"),
     )
@@ -781,36 +789,128 @@ def _persisted(stats: DataFrame) -> DataFrame:
     return track_cached(stats.persist(StorageLevel.MEMORY_AND_DISK))
 
 
-def _doc_local(
-    tokens: DataFrame, pred, assume_doc_clustered: bool
+def _contains_probe(
+    slots, config: LatticeConfig = LatticeConfig(), text=None
+) -> "F.Column | None":
+    """Superset candidate predicate over RAW text (``text``, default the
+    ``text`` column) for an analyzed query: a document can only produce a
+    span if every slot term occurs as a token, and every token is a
+    lowercased whitespace word of the text — so ``lower(text) CONTAINS
+    term`` (OR across a slot's alternatives, AND across slots) never drops
+    a matching doc.
+
+    VALIDITY: the probe compares ANALYZED terms against RAW text, a
+    superset only while ``config``'s follow-on chain is at most
+    ``lowercase``.  A transforming chain (soundex turns 'Robert' into
+    'R163'; asciifold folds accents the raw text still carries) emits
+    tokens the raw text never contains, so no probe (``None``) is
+    returned.  No probe either for an empty slot list or an empty slot
+    (nothing to anchor on); a non-str alternative raises ``TypeError``.
+    False positives just flow through the real matcher."""
+    alts_per_slot = [list(slot) if isinstance(slot, (list, tuple)) else [slot]
+                     for slot in slots]
+    for alts in alts_per_slot:
+        for alt in alts:
+            if not isinstance(alt, str):
+                raise TypeError(
+                    f"query term must be str, got {type(alt).__name__}: {alt!r}"
+                )
+    if (
+        set(config.effective_follow_on()) - {"lowercase"}
+        or not alts_per_slot
+        or not all(alts_per_slot)
+    ):
+        return None
+    lowered = F.lower(F.col("text") if text is None else text)
+    pred = None
+    for alts in alts_per_slot:
+        slot_pred = None
+        for alt in alts:
+            c = lowered.contains(alt.lower())
+            slot_pred = c if slot_pred is None else (slot_pred | c)
+        pred = slot_pred if pred is None else (pred & slot_pred)
+    return pred
+
+
+def _values(
+    docs: DataFrame, doc_id_col: str = "doc_id", spans_col: str = "spans"
 ) -> DataFrame:
-    """The ``pred``-selected postings of a token table, each document's
-    rows contiguous and sorted by (abs_pos, seq) within one partition.
-
-    One hash exchange co-locates each doc's candidate rows; the sort makes
-    them contiguous so mapInPandas can process thousands of docs per Arrow
-    batch (a per-doc applyInPandas would pay one UDF call per document);
-    ``_whole_docs`` re-cuts the batches at document boundaries.
-
-    ``assume_doc_clustered``: the caller guarantees each document's rows
-    are already contiguous-and-sorted within one input split (a table
-    written ``bucketBy(n, doc_id).sortBy(doc_id, abs_pos, seq)``, or an
-    Iceberg table with a doc_id bucket transform + sort order) — the
-    exchange AND the sort disappear; the match becomes a pure scan →
-    ArrowEval map, the zero-shuffle index path at 100 TB."""
-    cand = tokens.filter(pred).select(
-        "doc_id", "token", "abs_pos", "score", "seq"
+    """The ``(doc_id, values)`` rows the doc-scan kernel reads: the span
+    filtering and ordering run JVM-side, so two narrow columns cross
+    Arrow."""
+    return docs.select(
+        F.expr(f"CAST({doc_id_col} AS STRING) AS doc_id"),
+        text_values_col(spans_col).alias("values"),
     )
-    if not assume_doc_clustered:
-        n_part = tokens.sparkSession.sparkContext.defaultParallelism
-        cand = cand.repartition(n_part, "doc_id").sortWithinPartitions(
-            "doc_id", "abs_pos", "seq"
+
+
+def _scan_match(
+    values: DataFrame,
+    queries: list,
+    config: LatticeConfig,
+    params: MatchLatticeParams,
+    dtype: type = np.float32,
+    phrase_prefix: bool = False,
+    explain: bool = False,
+) -> DataFrame:
+    """The doc-scan kernel: ONE ``mapInPandas`` over ``(doc_id, values)``
+    rows (``_values``) that tokenizes each Arrow batch once and matches
+    every analyzed ``(query_id, terms, slop)`` of ``queries`` over its
+    tokens.  A document's tokens never leave its batch: no shuffle.
+
+    - Payload-only: the boosted hits (``HITS_SCHEMA``, plus the explain
+      arrays when asked), led by a ``query_id`` column when the queries
+      carry ids (``None`` for a single query).
+    - Composed (``include_span_score``, one query): the per-doc stats rows
+      (``span_stats_pandas``) of EVERY document with its lengths ``dl`` /
+      ``dl_norm`` — the kernel sees all of a document's tokens — for the
+      caller to persist and hand to ``_compose``.
+
+    The record chain under ``values`` must be evaluated once, so the rows
+    reaching the kernel carry at most one raw-text probe: a caller that
+    already filtered the raw text calls the kernel, not ``match_lattice``
+    (whose own probe over the reconstructed text Catalyst pushes below
+    the scan guard's exchange, re-running the record transform there)."""
+    composed = params.include_span_score
+    tagged = queries[0][0] is not None
+    scoring = (params.in_order, params.payload_function,
+               params.payload_length_norm_factor, dtype)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            toks = tokenize_pandas(pdf["doc_id"], pdf["values"], config)
+            for qid, terms, slop in queries:
+                if composed:
+                    out = span_stats_pandas(
+                        toks, pdf["doc_id"], terms, slop, *scoring,
+                        prefix_last=phrase_prefix, explain=explain,
+                    )
+                    doc = out["doc_id"]
+                    positional = toks[toks["pos_inc"].to_numpy() > 0]
+                    for col, rows in (("dl", toks), ("dl_norm", positional)):
+                        sizes = rows.groupby("doc_id").size()
+                        out[col] = doc.map(sizes).fillna(0).astype("int64")
+                else:
+                    out = match_tokens_pandas(
+                        toks, terms, slop, *scoring,
+                        prefix_last=phrase_prefix, explain=explain,
+                    )
+                if tagged:
+                    out.insert(0, "query_id", qid)
+                yield out
+
+    if composed:
+        return values.mapInPandas(
+            run, schema=_kernel_schema(SPAN_STATS_SCHEMA, explain, doclen=True)
         )
-    return cand
+    schema = (_QUERY_HITS_SCHEMA if tagged
+              else _kernel_schema(HITS_SCHEMA, explain))
+    return _boosted(values.mapInPandas(run, schema=schema), params)
 
 
 def _whole_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """The Arrow batches of a ``_doc_local`` partition, re-cut so that no
+    """The Arrow batches of a doc-local partition (each document's rows
+    contiguous, ``match_lattice_tokens``), re-cut so that no
     document spans two of them: Arrow may split a partition mid-document,
     so each batch's trailing document is carried over to the next."""
     carry: pd.DataFrame | None = None
@@ -842,7 +942,9 @@ def match_lattice(
     query_analyzer: str = "default",
     explain: bool = False,
 ) -> DataFrame:
-    """Document-scan match: tokenize + span-match + score in one
+    """Document-scan match: the query-level work (analysis, the
+    zero-terms case, the JVM probe, composition) around the doc-scan
+    kernel ``_scan_match`` — tokenize + span-match + score in one
     ``mapInPandas`` pass over the interleaved documents table.
 
     Physical plan: parquet scan (column-pruned to doc_id+spans) →
@@ -899,81 +1001,36 @@ def match_lattice(
             params,
         )
 
-    narrow = docs.select(
-        F.expr(f"CAST({doc_id_col} AS STRING) AS doc_id"),
-        text_values_col(spans_col).alias("values"),
-    )
-
-    # JVM-side candidate prefilter: ONE substring probe on the longest query
-    # term (a superset of token equality — the bare token prefixes each pipe
-    # record; length is the cheap rarity proxy).  Probing every term here
-    # would re-evaluate the document-reconstruction chain once per Contains:
-    # Catalyst collapses the projection into the (interpreted, HOF-bearing)
-    # Filter, so a k-term query rebuilt each doc's text k times in the scan
-    # stage.  The Python matcher verifies ALL terms anyway —
-    # a doc missing any term yields no postings — so the single-probe filter
-    # is correctness-neutral and evaluates the concat chain exactly once.
-    #
-    # VALIDITY: the probe compares an ANALYZED term against the RAW text,
-    # which is a superset only while the follow-on chain maps each token to
-    # a lowercase-substring of itself — true for 'lowercase', FALSE for
-    # transforming filters (soundex turns 'Robert' into 'R163', which never
-    # appears in the raw text; asciifold folds accents the raw text still
-    # carries).  With a transforming chain the prefilter must be skipped.
-    # Multi-phrase slots can't anchor the probe (the doc may contain any
-    # alternative) — probe the longest SINGLE-term slot, or skip when
-    # every slot is a multi.  Composed scoring skips it: corpus statistics
-    # cover every document.
+    values = _values(docs, doc_id_col, spans_col)
+    # JVM-side candidate prefilter: ONE substring probe on the longest
+    # single-term slot (a superset of token equality — the bare token
+    # prefixes each pipe record; length is the cheap rarity proxy).
+    # Probing every term would re-evaluate the document-reconstruction
+    # chain once per Contains: Catalyst collapses the projection into the
+    # (interpreted, HOF-bearing) Filter.  The matcher verifies ALL terms,
+    # so one probe is correctness-neutral.  Multi-phrase slots can't
+    # anchor it (the doc may hold any alternative); ``_contains_probe``
+    # returns None for a transforming follow-on chain.  Composed scoring
+    # skips it: corpus statistics cover every document.
     single_terms = [t for t in terms if isinstance(t, str)]
-    if (
-        not composed
-        and not set(config.effective_follow_on()) - {"lowercase"}
-        and single_terms
-    ):
-        probe = max(single_terms, key=len).lower()
-        narrow = narrow.filter(
-            F.lower(F.concat_ws(" ", F.col("values"))).contains(probe)
+    if not composed and single_terms:
+        probe = _contains_probe(
+            [max(single_terms, key=len)], config,
+            F.concat_ws(" ", F.col("values")),
         )
+        if probe is not None:
+            values = values.filter(probe)
 
-    kernel = (terms, slop, params.in_order, params.payload_function,
-              params.payload_length_norm_factor, dtype)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            toks = tokenize_pandas(pdf["doc_id"], pdf["values"], config)
-            if not composed:
-                yield match_tokens_pandas(
-                    toks, *kernel, prefix_last=phrase_prefix, explain=explain
-                )
-                continue
-            out = span_stats_pandas(
-                toks, pdf["doc_id"], *kernel, prefix_last=phrase_prefix,
-                explain=explain,
-            )
-            # this kernel sees every token of its documents, so it also
-            # supplies their lengths
-            doc = out["doc_id"]
-            positional = toks[toks["pos_inc"].to_numpy() > 0]
-            for col, rows in (("dl", toks), ("dl_norm", positional)):
-                sizes = rows.groupby("doc_id").size()
-                out[col] = doc.map(sizes).fillna(0).astype("int64")
-            yield out
-
+    hits = _scan_match(
+        values, [(None, terms, slop)], config, params, dtype, phrase_prefix,
+        explain,
+    )
     if composed:
-        stats = _persisted(narrow.mapInPandas(
-            run, schema=_kernel_schema(SPAN_STATS_SCHEMA, explain, doclen=True)
-        ))
+        stats = _persisted(hits)
         hits = _compose(
             stats.drop("dl", "dl_norm"),
             stats.selectExpr("doc_id", "dl", "dl_norm"),
             terms, params, phrase_prefix,
-        )
-    else:
-        hits = _boosted(
-            narrow.mapInPandas(
-                run, schema=_kernel_schema(HITS_SCHEMA, explain)
-            ),
-            params,
         )
     if top_k is not None:
         hits = hits.orderBy(F.desc("score"), "doc_id").limit(top_k)
@@ -1000,15 +1057,17 @@ def match_lattice_tokens(
     query_analyzer: str = "default",
     explain: bool = False,
     doclen: DataFrame | None = None,
-    assume_doc_clustered: bool = False,
     vocab: DataFrame | None = None,
 ) -> DataFrame:
-    """Token-table match: ``token IN terms`` filter (pushed down to the
-    scan) → shuffle by doc_id → per-doc span DP via ``mapInPandas``.
-
-    Use when the token stream is pre-materialized (the engine's "index").
-    If the token table is bucketed/partitioned by doc_id the exchange
-    disappears entirely.  The reference-default ``include_span_score=True``
+    """Token-table match, the one entry for a pre-materialized token table
+    (the index, ``match_snippets``, a user's token table): ``token IN
+    terms`` filter (pushed down to the scan) → one hash exchange on doc_id
+    plus a sort, so each doc's candidate postings sit contiguous and
+    position-ordered in one partition → the span DP via ``mapInPandas``
+    over thousands of docs per Arrow batch (``_whole_docs`` re-cuts the
+    batches at document boundaries).  Matching over documents goes
+    through the doc-scan kernel instead (``match_lattice``).
+    The reference-default ``include_span_score=True``
     multiplies in the similarity computed from the same token table (the
     index-statistics analog): the kernel emits the per-doc stats rows of
     every candidate document (``span_stats_pandas``), the operator
@@ -1065,9 +1124,12 @@ def match_lattice_tokens(
                 "write_token_index"
             )
 
-    cand = _doc_local(
-        tokens, candidate_pred(terms, phrase_prefix), assume_doc_clustered
+    cand = tokens.filter(candidate_pred(terms, phrase_prefix)).select(
+        "doc_id", "token", "abs_pos", "score", "seq"
     )
+    cand = cand.repartition(
+        spark.sparkContext.defaultParallelism, "doc_id"
+    ).sortWithinPartitions("doc_id", "abs_pos", "seq")
 
     kernel = (terms, slop, params.in_order, params.payload_function,
               params.payload_length_norm_factor, dtype)
@@ -1128,7 +1190,6 @@ def match_snippets(
     config: LatticeConfig | None = None,
     params: MatchLatticeParams | None = None,
     dtype: type = np.float32,
-    assume_doc_clustered: bool = False,
 ) -> DataFrame:
     """Highlight surface: the matched span windows with their token text.
 
@@ -1144,8 +1205,7 @@ def match_snippets(
     params = params or MatchLatticeParams()
     terms, _ = _resolve(query, config, params, "default")
     hits = match_lattice_tokens(
-        tokens, query, config, params, dtype=dtype, explain=True,
-        assume_doc_clustered=assume_doc_clustered,
+        tokens, query, config, params, dtype=dtype, explain=True
     )
     spans = hits.select(
         "doc_id",
@@ -1179,34 +1239,33 @@ def match_snippets(
 
 
 def match_lattice_many(
-    tokens: DataFrame,
+    docs: DataFrame,
     queries: list[tuple[str, str]],
     config: LatticeConfig | None = None,
     params: MatchLatticeParams | None = None,
     dtype: type = np.float32,
-    assume_doc_clustered: bool = False,
+    doc_id_col: str = "doc_id",
+    spans_col: str = "spans",
 ) -> DataFrame:
     """Batch execution of many standing queries in ONE pass — the
     percolator-shaped operator: at 10^12 documents, N queries as N jobs
     cost N corpus scans; this costs one.
 
+    ``docs``: the interleaved documents table, as for ``match_lattice``.
     ``queries``: (query_id, query) pairs sharing ``params`` — each query
-    a text string or a multi-phrase slot list.  The scan
-    filter is ``token IN union(all query terms)`` (still pushed down); one
-    shuffle co-locates each doc's candidate rows; the per-batch matcher
-    then runs each query's span DP over the already-localized postings
-    (pure numpy — the marginal cost per extra query is the DP, not IO).
-    Output: (query_id, doc_id, score, n_spans), payload-only scoring
-    (compose BM25 per query downstream if needed — corpus statistics are
-    query-independent).
+    a text string or a multi-phrase slot list.  The doc-scan kernel
+    tokenizes each Arrow batch once and runs every query's span DP over
+    its tokens (pure numpy — the marginal cost per extra query is the DP,
+    not IO); no shuffle.  There is no prefilter of its own: a caller that
+    can probe the raw text filters ``docs`` at the scan (an OR over the
+    queries' ``_contains_probe``).  Output: (query_id, doc_id, score,
+    n_spans), payload-only scoring × ``boost`` (compose BM25 per query
+    downstream if needed — corpus statistics are query-independent).
 
     Zero-term queries (all stopwords/whitespace) honor
     ``params.zero_terms_query`` exactly like ``match_lattice``: 'none'
-    contributes no rows for that query_id; 'all' emits a MIN_SCORE row per
-    distinct document (one extra distinct over the token table, only paid
-    when such a query is present)."""
-    from pyspark.sql import types as T
-
+    contributes no rows for that query_id; 'all' emits a MIN_SCORE row
+    per document of ``docs``."""
     config = config or LatticeConfig()
     params = params or MatchLatticeParams()
     if params.include_span_score:
@@ -1216,65 +1275,26 @@ def match_lattice_many(
         )
     analyzed: list[tuple[str, list, int]] = []
     zero_qids: list[str] = []
-    union_terms: set[str] = set()
     for qid, qtext in queries:
         # a list-shaped query is a multi-phrase slot list (same contract
         # as match_lattice)
-        if isinstance(qtext, str):
-            terms = analyze_query(qtext, config)
+        terms, slop = _resolve(qtext, config, params)
+        if terms:
+            analyzed.append((qid, terms, slop))
         else:
-            terms = analyze_multi_phrase(qtext, config)
-        if not terms:
             zero_qids.append(qid)
-            continue
-        slop = params.effective_slop(config, len(terms))
-        analyzed.append((qid, terms, slop))
-        union_terms.update(_flat_terms(terms))
-    schema = T.StructType(
-        [T.StructField("query_id", T.StringType(), False)]
-        + list(HITS_SCHEMA.fields)
-    )
-    spark = tokens.sparkSession
-    zero_hits = None
+    values = _values(docs, doc_id_col, spans_col)
+    spark = docs.sparkSession
+    parts = []
+    if analyzed:
+        parts.append(_scan_match(values, analyzed, config, params, dtype))
     if zero_qids and params.zero_terms_query == "all":
         qdf = spark.createDataFrame(
             [(q,) for q in zero_qids], schema="query_id string"
         )
-        zero_hits = (
-            tokens.select("doc_id")
-            .distinct()
-            .crossJoin(F.broadcast(qdf))
-            .select(
-                "query_id",
-                F.col("doc_id").cast("string").alias("doc_id"),
-                F.lit(float(MIN_SCORE) * params.boost)
-                .cast("double")
-                .alias("score"),
-                F.lit(0).cast("int").alias("n_spans"),
-            )
-        )
-    if not analyzed:
-        if zero_hits is not None:
-            return zero_hits
-        return spark.createDataFrame([], schema)
-
-    cand = _doc_local(
-        tokens, F.col("token").isin(sorted(union_terms)), assume_doc_clustered
-    )
-    in_order, pf, ln = params.in_order, params.payload_function, (
-        params.payload_length_norm_factor
-    )
-
-    def run(batches) -> Iterator[pd.DataFrame]:
-        for pdf in _whole_docs(batches):
-            for qid, terms, slop in analyzed:
-                out = match_tokens_pandas(
-                    pdf, terms, slop, in_order, pf, ln, dtype
-                )
-                out.insert(0, "query_id", qid)
-                yield out
-
-    matched = cand.mapInPandas(run, schema=schema)
-    if zero_hits is not None:
-        matched = matched.unionByName(zero_hits)
-    return matched
+        parts.append(_zero_terms_hits(
+            F.broadcast(qdf).crossJoin(values.select("doc_id")), params
+        ))
+    if not parts:
+        return spark.createDataFrame([], _QUERY_HITS_SCHEMA)
+    return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])

@@ -34,7 +34,12 @@ from full_lattice_search_spark.operators.dedup import (
 )
 from full_lattice_search_spark.operators.extract import extract_spans
 from full_lattice_search_spark.operators.match import (
-    match_lattice_tokens,
+    _contains_probe,
+    _resolve,
+    _scan_match,
+    _values,
+    match_lattice,
+    match_lattice_many,
     track_cached,
 )
 from full_lattice_search_spark.operators.multimodal import media_features
@@ -91,44 +96,18 @@ def _tokens(
     )
 
 
-def _contains_probe(
-    slots, config: LatticeConfig = LatticeConfig()
-) -> "F.Column | None":
-    """Superset candidate predicate over the RAW text for an analyzed
-    query (guide §3.2): a document can only produce a span if every slot
-    term occurs as a token, and every token is a lowercased whitespace
-    word of ``text`` — so ``lower(text) CONTAINS term`` (OR across a
-    slot's alternatives, AND across slots) never drops a matching doc.
-    That holds only when ``config``'s follow-on chain is at most
-    ``lowercase`` (same rule as the doc-scan prefilter,
-    operators/match.py): a transforming chain (soundex, asciifold) emits
-    tokens the raw text never contains, so no probe (``None``) is
-    returned.  No probe either for an empty slot list or an empty slot
-    (nothing to anchor on); a non-str alternative raises ``TypeError``.
-    False positives just flow through the real matcher."""
-    alts_per_slot = [list(slot) if isinstance(slot, (list, tuple)) else [slot]
-                     for slot in slots]
-    for alts in alts_per_slot:
-        for alt in alts:
-            if not isinstance(alt, str):
-                raise TypeError(
-                    f"query term must be str, got {type(alt).__name__}: {alt!r}"
-                )
-    if (
-        set(config.effective_follow_on()) - {"lowercase"}
-        or not alts_per_slot
-        or not all(alts_per_slot)
-    ):
-        return None
-    lowered = F.lower(F.col("text"))
-    pred = None
-    for alts in alts_per_slot:
-        slot_pred = None
-        for alt in alts:
-            c = lowered.contains(alt.lower())
-            slot_pred = c if slot_pred is None else (slot_pred | c)
-        pred = slot_pred if pred is None else (pred & slot_pred)
-    return pred
+def _scan(docs, query, config, params, dtype=np.float32, phrase_prefix=False):
+    """Hits of one query over ``docs`` through the doc-scan kernel.  Every
+    caller has already probed the raw text at the scan
+    (``lattice_docs(where=_contains_probe(...))``), so this calls the
+    kernel, not ``match_lattice``: that adds its own probe over the
+    reconstructed record text, which Catalyst pushes below the scan
+    guard's exchange, and the record transform would run twice."""
+    terms, slop = _resolve(query, config, params)
+    return _scan_match(
+        _values(docs), [(None, terms, slop)], config, params, dtype,
+        phrase_prefix,
+    )
 
 
 # Exact-duplicate augmentation: clone every 10th document.
@@ -290,8 +269,6 @@ def q_match_lucene_sim(spark, sf_dir):
     Gated on the similarity column so the new machinery (span-width freq,
     overlap-discounted + SmallFloat-quantized dl, corpus stats, float32
     chain) is what the hash covers."""
-    from full_lattice_search_spark.operators.match import match_lattice
-
     hits = match_lattice(
         lattice_docs(spark, sf_dir),
         "hash merge",
@@ -419,8 +396,6 @@ def q_match_lucene_prefix(spark, sf_dir):
     chain stretches to the nearest prefix-matching token — the engine and
     the oracle must agree on BOTH the expansion set's statistics and the
     float32 composition."""
-    from full_lattice_search_spark.operators.match import match_lattice
-
     hits = match_lattice(
         lattice_docs(spark, sf_dir),
         "hash mer",
@@ -515,34 +490,16 @@ def _doclen_jvm(spark, sf_dir, n_tokens: int = 24) -> DataFrame:
 
 
 def _match(spark, sf_dir, query, slop, dtype=np.float32, **params):
-    # payload-only scoring (include_span_score=False) unless a query
-    # explicitly exercises the composed reference-default ranking
-    params.setdefault("include_span_score", False)
-    # candidate prefilter at the scan: only docs that can possibly match
-    # reach the record projection / Python tokenizer.  Skipped for
-    # composed scoring (corpus statistics are defined over every doc).
-    cfg = LatticeConfig()
-    where = None
-    if not params.get("include_span_score"):
-        slots = (
-            [query]
-            if isinstance(query, str) and " " not in query
-            else (query.split() if isinstance(query, str) else list(query))
-        )
-        where = _contains_probe(slots, cfg)
-    toks = _tokens(spark, sf_dir, where=where)
-    # ``lattice_tokenize`` emits each document's rows contiguous and
-    # position-sorted within one partition, so the matcher's doc_id
-    # exchange + sort are redundant here: assume_doc_clustered fuses
-    # tokenize → candidate filter → span DP into ONE zero-shuffle stage
-    # (Exchange+Sort → nothing on the payload path; guide §2.4).
-    return match_lattice_tokens(
-        toks,
+    """Payload-only hits of ``query``: only documents that can match reach
+    the record projection (a raw-text probe at the scan), then the
+    doc-scan kernel."""
+    slots = query.split() if isinstance(query, str) else query
+    return _scan(
+        lattice_docs(spark, sf_dir, where=_contains_probe(slots)),
         query,
-        cfg,
-        MatchLatticeParams(slop=slop, **params),
-        dtype=dtype,
-        assume_doc_clustered=True,
+        LatticeConfig(),
+        MatchLatticeParams(slop=slop, include_span_score=False, **params),
+        dtype,
     )
 
 
@@ -675,16 +632,30 @@ GROUP BY doc_id
 
 def q_match_topk(spark, sf_dir):
     hits = _match(spark, sf_dir, "stream", slop=0, dtype=np.float64)
-    from pyspark.sql import Window
-
-    scored = hits.select(
-        "doc_id", F.round("score", 4).alias("score")
+    return _top_k(
+        hits.select("doc_id", F.round("score", 4).alias("score")),
+        20, "score", "doc_id",
     )
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
+
+
+def _top_k(df: DataFrame, k: int, desc: str, asc: str) -> DataFrame:
+    """The first ``k`` rows of ``df`` in (``desc`` DESC, ``asc``) order,
+    with their 1-based rank ``rn`` appended: what ``row_number() <= k``
+    over that order selects, as the order is total (``asc`` is unique).
+    ``limit`` keeps k rows per partition before one merge, and only
+    those k rows are ranked, in one sorted array — an unpartitioned
+    window would move every row through one task."""
+    cmp = (
+        f"(a, b) -> CASE WHEN a.{desc} > b.{desc} THEN -1"
+        f" WHEN a.{desc} < b.{desc} THEN 1"
+        f" WHEN a.{asc} < b.{asc} THEN -1"
+        f" WHEN a.{asc} > b.{asc} THEN 1 ELSE 0 END"
+    )
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 20)
-        .select("doc_id", "score", F.col("rn").cast("long").alias("rn"))
+        df.orderBy(F.desc(desc), F.asc(asc)).limit(k)
+        .agg(F.expr(f"array_sort(collect_list(struct(*)), {cmp}) AS r"))
+        .selectExpr("posexplode(r) AS (i, t)")
+        .selectExpr("t.*", "CAST(i + 1 AS BIGINT) AS rn")
     )
 
 
@@ -819,17 +790,12 @@ FROM incs
 
 
 def q_match_buckets_score(spark, sf_dir):
-    toks = _tokens(
-        spark, sf_dir, where=_contains_probe(["group"]),
-        score_buckets=(0.7, 3, 0.4, 2),
-    )
-    hits = match_lattice_tokens(
-        toks,
+    hits = _scan(
+        lattice_docs(spark, sf_dir, where=_contains_probe(["group"])),
         "group",
         LatticeConfig(score_buckets=(0.7, 3, 0.4, 2)),
         MatchLatticeParams(slop=0, include_span_score=False),
-        dtype=np.float64,
-        assume_doc_clustered=True,
+        np.float64,
     )
     return hits.select(
         "doc_id",
@@ -856,13 +822,11 @@ FROM reps GROUP BY doc_id
 
 
 def q_match_unordered_2(spark, sf_dir):
-    toks = _tokens(spark, sf_dir, where=_contains_probe(["small", "key"]))
-    hits = match_lattice_tokens(
-        toks,
+    hits = _scan(
+        lattice_docs(spark, sf_dir, where=_contains_probe(["small", "key"])),
         "small key",
         LatticeConfig(),
         MatchLatticeParams(slop=3, in_order=False, include_span_score=False),
-        assume_doc_clustered=True,
     )
     return hits.select("doc_id")
 
@@ -988,20 +952,18 @@ def q_match_span_score(spark, sf_dir):
     (LatticePayloadScoreQuery.java:333-339).  Components are rounded
     before the product so the DuckDB recomputation is bit-deterministic.
 
-    Physical shape: doclen is a pure-JVM projection (``_doclen_jvm``) and
-    the operator persists the kernel's per-doc stats frame, which feeds
-    both the tf/df side and the hits: ONE tokenize execution per run.
-    The persisted frame is an intra-query intermediate, recomputed from
+    Physical shape: the composed doc-scan ``match_lattice`` (no probe:
+    corpus statistics cover every document) persists the kernel's per-doc
+    stats frame, which carries each document's lengths and feeds both the
+    tf/df side and the hits: ONE tokenize execution per run.  The
+    persisted frame is an intra-query intermediate, recomputed from
     parquet on every invocation."""
-    toks = _tokens(spark, sf_dir, where=_contains_probe(["table"]))
-    hits = match_lattice_tokens(
-        toks,
+    hits = match_lattice(
+        lattice_docs(spark, sf_dir),
         "table",
         LatticeConfig(),
         MatchLatticeParams(slop=0, include_span_score=True),
         dtype=np.float64,
-        doclen=_doclen_jvm(spark, sf_dir),
-        assume_doc_clustered=True,
     )
     return hits.selectExpr(
         "doc_id",
@@ -1087,20 +1049,13 @@ def q_match_audio_seconds(spark, sf_dir):
     cfg = LatticeConfig(
         lattice_format="audio", audio_position_increment_seconds=_AUDIO_INC
     )
-    from full_lattice_search_spark.functions.tokenizer import lattice_tokenize
-
-    toks = lattice_tokenize(
+    hits = _scan(
         _audio_lattice_docs(
             spark, sf_dir, where=_contains_probe(["hash", "merge"])
         ),
-        cfg,
-    )
-    hits = match_lattice_tokens(
-        toks,
         "hash merge",
         cfg,
         MatchLatticeParams(slop_seconds=2.0, include_span_score=False),
-        assume_doc_clustered=True,
     )
     return hits.select(
         "doc_id", F.col("n_spans").cast("long").alias("n_spans")
@@ -1132,9 +1087,6 @@ transform(
 
 def q_match_null_payload(spark, sf_dir):
     """A1: null/undecodable payloads score as 1e-5 in the fold."""
-    from full_lattice_search_spark.functions.tokenizer import lattice_tokenize
-    from full_lattice_search_spark.operators.match import match_lattice_tokens
-
     docs = _par(
         _read(spark, sf_dir, "documents").filter(_contains_probe(["table"])),
         spark,
@@ -1149,14 +1101,12 @@ def q_match_null_payload(spark, sf_dir):
             "'offset', 0))"
         ).alias("spans"),
     )
-    toks = lattice_tokenize(docs, LatticeConfig())
-    hits = match_lattice_tokens(
-        toks,
+    hits = _scan(
+        docs,
         "table",
         LatticeConfig(),
         MatchLatticeParams(slop=0, include_span_score=False),
-        dtype=np.float64,
-        assume_doc_clustered=True,
+        np.float64,
     )
     return hits.select(
         "doc_id",
@@ -1188,7 +1138,6 @@ def q_match_snippets(spark, sf_dir):
         "hash merge",
         LatticeConfig(),
         MatchLatticeParams(slop=5, include_span_score=False),
-        assume_doc_clustered=True,
     )
     return snip.select(
         "doc_id",
@@ -1228,11 +1177,8 @@ GROUP BY s.doc_id, s.span_start, s.span_end
 
 
 def q_match_many(spark, sf_dir):
-    """Percolator-shaped batch matching: 3 standing queries, one scan/one
-    shuffle (token IN union-of-terms), per-query span DP over the
-    co-located postings."""
-    from full_lattice_search_spark.operators.match import match_lattice_many
-
+    """Percolator-shaped batch matching: 3 standing queries, one scan and
+    one tokenization, per-query span DP in the doc-scan kernel."""
     # prefilter: a doc can contribute only if it can match >= 1 standing
     # query — OR over the queries' slot-AND probes (superset; guide §3.2)
     probe = (
@@ -1240,13 +1186,11 @@ def q_match_many(spark, sf_dir):
         | _contains_probe(["key", "order", "data"])
         | _contains_probe(["table"])
     )
-    toks = _tokens(spark, sf_dir, where=probe)
     hits = match_lattice_many(
-        toks,
+        lattice_docs(spark, sf_dir, where=probe),
         [("q_hm", "hash merge"), ("q_kod", "key order data"), ("q_t", "table")],
         LatticeConfig(),
         MatchLatticeParams(slop=8, include_span_score=False),
-        assume_doc_clustered=True,
     )
     return hits.select(
         "query_id", "doc_id", F.col("n_spans").cast("long").alias("n_spans")
@@ -1278,24 +1222,19 @@ SQL_MATCH_MANY = _sql_match_many()
 
 def q_match_many_multi(spark, sf_dir):
     """Percolator batch with a MULTI-PHRASE standing query in the mix:
-    same one-scan/one-shuffle plan, slot lists flow through the shared
-    span DP."""
-    from full_lattice_search_spark.operators.match import match_lattice_many
-
+    same one-scan plan, slot lists flow through the shared span DP."""
     probe = (
         _contains_probe([["hash", "key"], ["merge", "order"]])
         | _contains_probe(["table"])
     )
-    toks = _tokens(spark, sf_dir, where=probe)
     hits = match_lattice_many(
-        toks,
+        lattice_docs(spark, sf_dir, where=probe),
         [
             ("q_mp", [["hash", "key"], ["merge", "order"]]),
             ("q_t", "table"),
         ],
         LatticeConfig(),
         MatchLatticeParams(slop=5, include_span_score=False),
-        assume_doc_clustered=True,
     )
     return hits.select(
         "query_id", "doc_id", F.col("n_spans").cast("long").alias("n_spans")
@@ -1320,8 +1259,6 @@ SQL_MATCH_MANY_MULTI = _sql_match_many_multi()
 def q_match_zero_terms_all(spark, sf_dir):
     """P5: zero_terms_query='all' — an all-whitespace query matches every
     document with MIN_SCORE (MatchLatticeQueryBuilder zeroTermsQuery)."""
-    from full_lattice_search_spark.operators.match import match_lattice
-
     hits = match_lattice(
         lattice_docs(spark, sf_dir),
         "   ",
@@ -1499,14 +1436,12 @@ GROUP BY doc_id
 
 def q_match_phrase_prefix(spark, sf_dir):
     # 'mer' probes as a plain substring: superset of startswith-'mer' tokens
-    toks = _tokens(spark, sf_dir, where=_contains_probe(["hash", "mer"]))
-    hits = match_lattice_tokens(
-        toks,
+    hits = _scan(
+        lattice_docs(spark, sf_dir, where=_contains_probe(["hash", "mer"])),
         "hash mer",
         LatticeConfig(),
         MatchLatticeParams(slop=5, include_span_score=False),
         phrase_prefix=True,
-        assume_doc_clustered=True,
     )
     return hits.select("doc_id", F.col("n_spans").cast("long").alias("n_spans"))
 
@@ -3441,18 +3376,13 @@ def q_top_suppliers(spark, sf_dir):
         )
     )
     joined = rev.join(F.broadcast(sup), rev.l_suppkey == sup.s_suppkey)
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("revenue"), F.asc("s_suppkey"))
-    return (
+    return _top_k(
         joined.select(
             F.col("s_suppkey").cast("long").alias("s_suppkey"),
             F.col("s_name").alias("s_name"),
             F.round("revenue", 4).alias("revenue"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("s_suppkey", "s_name", "revenue", F.col("rn").cast("long").alias("rn"))
+        ),
+        10, "revenue", "s_suppkey",
     )
 
 

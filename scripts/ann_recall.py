@@ -1,6 +1,6 @@
 """Measure ANN recall@k of the LSH bucket variants vs exact brute force.
 
-Appends an '## ANN recall' section to BENCH/BASELINE.md.  Variants:
+Prints an '## ANN recall' markdown section to stdout.  Variants:
 - axis-sign LSH (deterministic, oracle-twinned — but degenerate when a
   dimension's values are mostly one sign)
 - axis-sign + Hamming-1 multi-probe
@@ -24,8 +24,6 @@ from __future__ import annotations
 import os
 import sys
 import time
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
@@ -304,9 +302,7 @@ def main() -> None:
         "- 'returned/asked' < 1 means buckets were too sparse to fill k"
         " results (the recall ceiling for that variant).",
     ]
-    with open(f"{REPO}/BENCH/BASELINE.md", "a") as f:
-        f.write("\n".join(lines) + "\n")
-    print("appended ANN recall section to BENCH/BASELINE.md")
+    print("\n".join(lines))
     spark.stop()
 
 

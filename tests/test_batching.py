@@ -101,6 +101,16 @@ def test_brute_force_arrow_equals_hof_path(spark):
             )
 
 
+def _with_empty_doc(spark, docs):
+    """``docs`` plus one document whose only text span is empty."""
+    from full_lattice_search_spark.schema import DOCUMENTS_SCHEMA
+
+    empty = spark.createDataFrame(
+        [("doc-empty", [("text", "", None, 0)])], DOCUMENTS_SCHEMA
+    )
+    return docs.unionByName(empty)
+
+
 def test_match_many_zero_terms_honors_params(spark):
     """A zero-term standing query must not silently vanish: with
     zero_terms_query='all' it emits a MIN_SCORE row per document; with
@@ -108,15 +118,16 @@ def test_match_many_zero_terms_honors_params(spark):
     from full_lattice_search_spark.config import MIN_SCORE
     from full_lattice_search_spark.operators.match import match_lattice_many
 
-    docs = synth_documents(spark, 40, seed=29, mega_every=0).cache()
-    toks = lattice_tokenize(docs, LatticeConfig()).cache()
-    # same universe as match_lattice_tokens' zero-terms path: documents
-    # present in the token table (an empty-text doc has no postings)
-    n_docs = toks.select("doc_id").distinct().count()
+    docs = _with_empty_doc(
+        spark, synth_documents(spark, 40, seed=29, mega_every=0)
+    ).cache()
+    # same universe as match_lattice's zero-terms path: every document,
+    # the empty-text one included
+    n_docs = docs.count()
     queries = [("q_real", "the quick"), ("q_zero", "   ")]
 
     all_hits = match_lattice_many(
-        toks,
+        docs,
         queries,
         LatticeConfig(),
         MatchLatticeParams(
@@ -130,7 +141,7 @@ def test_match_many_zero_terms_honors_params(spark):
     assert any(r["query_id"] == "q_real" for r in all_hits)
 
     none_hits = match_lattice_many(
-        toks,
+        docs,
         queries,
         LatticeConfig(),
         MatchLatticeParams(
@@ -139,3 +150,38 @@ def test_match_many_zero_terms_honors_params(spark):
     ).collect()
     assert not any(r["query_id"] == "q_zero" for r in none_hits)
     assert any(r["query_id"] == "q_real" for r in none_hits)
+
+
+def test_match_many_equals_per_query_match_lattice(spark):
+    """The batch operator runs N queries on the doc-scan kernel: its rows
+    for each query equal a payload-only ``match_lattice`` of that query,
+    and a zero-term query under 'all' yields one row per document — the
+    same universe as ``match_lattice``'s, the empty-text doc included."""
+    from full_lattice_search_spark.operators.match import match_lattice_many
+
+    docs = _with_empty_doc(
+        spark, synth_documents(spark, 60, seed=41, mega_every=0)
+    ).cache()
+    cfg = LatticeConfig()
+    params = MatchLatticeParams(
+        slop=3, include_span_score=False, zero_terms_query="all", boost=2.0
+    )
+    queries = [("q_two", "the quick"), ("q_multi", [["quick", "fast"], "fox"]),
+               ("q_one", "fox"), ("q_unordered", "fox the"), ("q_zero", " ")]
+
+    many = sorted(
+        (r["query_id"], r["doc_id"], r["score"], r["n_spans"])
+        for r in match_lattice_many(docs, queries, cfg, params).collect()
+    )
+    single = sorted(
+        (qid, r["doc_id"], r["score"], r["n_spans"])
+        for qid, q in queries
+        for r in match_lattice(docs, q, cfg, params).collect()
+    )
+    assert many == single
+    zero_docs = [d for qid, d, _, _ in many if qid == "q_zero"]
+    assert sorted(zero_docs) == sorted(
+        r["doc_id"] for r in docs.select("doc_id").collect()
+    )
+    assert "doc-empty" in zero_docs
+    assert {qid for qid, *_ in many} == {qid for qid, _ in queries}

@@ -1,6 +1,6 @@
 """Source-layout rules, checked on the text of the repository's Python
-files (no Spark): one session builder, and a package that sets no session
-conf on its caller's behalf."""
+files (no Spark): one session builder, a package that sets no session
+conf on its caller's behalf, and no clustered-input flag on the matchers."""
 
 from __future__ import annotations
 
@@ -37,4 +37,14 @@ def test_package_sets_no_session_conf():
         for i, line in enumerate(p.read_text().splitlines(), 1)
         if re.search(r"\.conf\.set\(", line)
     )
+    assert found == []
+
+
+def test_no_clustered_input_flag():
+    """Matching over documents runs on the doc-scan kernel and a token
+    table always gets its doc_id exchange: the flag that let a caller
+    skip it is gone from every Python file."""
+    flag = "assume_doc_" + "clustered"
+    found = sorted(str(p.relative_to(ROOT)) for p in sources(ROOT)
+                   if flag in p.read_text())
     assert found == []

@@ -4,6 +4,8 @@ and broadcast joins for small dimensions."""
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -121,6 +123,34 @@ def test_docscan_prefilter_single_probe(spark):
     plan = plan_of(hits)
     assert plan.count("concat_ws") == 1, plan
     assert plan.count("Contains") == 1, plan
+
+
+# every registry entry matching over the derived lattice view with
+# payload-only scoring
+MATCH_FAMILY = [
+    "match_ordered_2", "match_ordered_3", "match_multi_phrase",
+    "match_score_single", "match_topk", "match_unordered_3",
+    "match_payload_max", "match_payload_min", "match_boosted",
+    "match_buckets_score", "match_unordered_2", "match_audio_seconds",
+    "match_null_payload", "match_phrase_prefix", "match_many",
+    "match_many_multi",
+]
+PYTHON_NODE = re.compile(r"\w*(?:InPandas|InArrow|EvalPython)\b")
+
+
+@pytest.mark.parametrize("name", MATCH_FAMILY)
+def test_match_family_runs_one_python_node(spark, name):
+    """A registry match is ONE Python node, the doc-scan kernel, over ONE
+    evaluation of the record transform: no tokenize node feeding a second
+    matcher node, and no probe over the reconstructed record text that
+    Catalyst would push below the scan guard's exchange (which re-runs the
+    transform in the scan task)."""
+    from full_lattice_search_spark.plans.queries import QUERIES
+
+    plan = plan_of(QUERIES[name](spark, "/root/testdata/sf0.001"))
+    assert len(PYTHON_NODE.findall(plan)) == 1, plan
+    assert plan.count("slice(split(text") == 1, plan
+    assert "transform(" in plan
 
 
 def test_curate_no_forced_broadcast(spark):

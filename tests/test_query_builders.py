@@ -1,5 +1,5 @@
 """Query-builder hygiene (plans/queries.py): the raw-text candidate probe
-refuses what it cannot prefilter soundly, every frame a builder persists
+(operators/match.py) refuses what it cannot prefilter soundly, every frame a builder persists
 is released by the composed-cache scope, building a query over an
 already-read table launches no Spark job, building a composed entry
 stays within its py4j budget, and the scan-parallelism guard decides
@@ -19,8 +19,9 @@ from full_lattice_search_spark import (
     composed_cache_scope,
     release_composed_caches,
 )
+from full_lattice_search_spark.operators.match import _contains_probe
 from full_lattice_search_spark.plans.lattice_view import scan_parallel
-from full_lattice_search_spark.plans.queries import QUERIES, _contains_probe
+from full_lattice_search_spark.plans.queries import QUERIES
 
 TEXTS = ["Hash join then MERGE", "hash only", "merge hash", "fast fox",
          "a quick Fox", "nothing here"]

@@ -125,51 +125,6 @@ def test_read_source_dispatch(spark, tmp_path):
         read_source(spark, "table:no_such_table").count()
 
 
-def test_bucketed_table_removes_match_exchange(spark, tmp_path):
-    """A token table bucketed+sorted by doc_id makes the match path
-    shuffle-free (the 100 TB index layout): no Exchange in the plan, and
-    hits identical to the shuffling path."""
-    import pyspark.sql.functions as F
-
-    from full_lattice_search_spark.config import (
-        LatticeConfig,
-        MatchLatticeParams,
-    )
-    from full_lattice_search_spark.functions.tokenizer import lattice_tokenize
-    from full_lattice_search_spark.operators.match import match_lattice_tokens
-
-    docs = synth_documents(spark, 60, seed=31, mega_every=0)
-    toks = lattice_tokenize(docs, LatticeConfig())
-    spark.sql("DROP TABLE IF EXISTS toks_bucketed")
-    (
-        toks.write.bucketBy(4, "doc_id")
-        .sortBy("doc_id", "abs_pos", "seq")
-        .mode("overwrite")
-        .saveAsTable("toks_bucketed")
-    )
-    try:
-        bucketed = spark.table("toks_bucketed")
-        params = MatchLatticeParams(slop=3, include_span_score=False)
-        fast = match_lattice_tokens(
-            bucketed, "the quick", LatticeConfig(), params,
-            assume_doc_clustered=True,
-        )
-        plan = fast._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        slow = match_lattice_tokens(
-            bucketed, "the quick", LatticeConfig(), params
-        )
-        key = lambda df: sorted(
-            (r["doc_id"], round(r["score"], 6), r["n_spans"])
-            for r in df.collect()
-        )
-        got = key(fast)
-        assert got == key(slow)
-        assert len(got) > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS toks_bucketed")
-
-
 def test_indexed_phrase_prefix_parity_with_scan(spark, index_path):
     """phrase_prefix over the pruned index: expansion buckets resolved
     from the vocab table must make the span DP see every prefix-matching
