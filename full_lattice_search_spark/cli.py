@@ -54,7 +54,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     ix.add_argument("--input", required=True)
     ix.add_argument("--output", required=True, help="token index path")
-    ix.add_argument("--token-buckets", type=int, default=64)
     ix.add_argument("--lattice-format", default="lattice")
     ix.add_argument("--audio-inc-secs", type=float, default=0.01)
 
@@ -147,12 +146,9 @@ def main(argv: list[str] | None = None) -> int:
             audio_position_increment_seconds=args.audio_inc_secs,
         )
         docs = read_source(spark, args.input)
-        write_token_index(
-            docs, args.output, config, n_token_buckets=args.token_buckets
-        )
+        write_token_index(docs, args.output, config)
         n = spark.read.parquet(args.output).count()
-        print(json.dumps({"status": "ok", "postings": n,
-                          "token_buckets": args.token_buckets}))
+        print(json.dumps({"status": "ok", "postings": n}))
     elif args.cmd == "search":
         from full_lattice_search_spark.api import search as api_search
 

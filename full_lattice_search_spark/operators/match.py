@@ -705,7 +705,6 @@ def _compose(
     terms: list,
     params: MatchLatticeParams,
     prefix: bool,
-    vocab: DataFrame | None = None,
 ) -> DataFrame:
     """A7 ``include_span_score``: multiply the similarity into the payload
     score, mirroring ``LatticePayloadScoreQuery.java:333-339``
@@ -716,9 +715,8 @@ def _compose(
 
     ``stats``: the persisted per-doc frame a matching kernel emitted
     (``span_stats_pandas``).  ``doclen``: (doc_id, dl[, dl_norm]) for
-    every document of the corpus.  ``vocab``: an optional (token, df)
-    term dictionary; without it dfs come from the stats rows, which hold
-    every document with a candidate term.
+    every document of the corpus.  The dfs come from the stats rows,
+    which hold every document with a candidate term.
 
     - ``similarity='engine'``: ``bm25_from_tf`` over the exploded tf
       arrays — the same expression ``bm25_scores`` uses.
@@ -741,12 +739,9 @@ def _compose(
         *(["dl_norm"] if lucene else []),
     )
     if lucene:
-        if vocab is not None:
-            df_rows = vocab.filter(candidate_pred(terms, prefix))
-        else:
-            df_rows = stats.selectExpr("explode(tf_tokens) AS token").groupBy(
-                "token"
-            ).agg(F.expr("count(1) AS df"))
+        df_rows = stats.selectExpr("explode(tf_tokens) AS token").groupBy(
+            "token"
+        ).agg(F.expr("count(1) AS df"))
         dfs = {r["token"]: int(r["df"]) for r in df_rows.collect()}
         weight, avgdl = _lucene_corpus_consts(
             doclen, dfs, _lucene_idf_terms(terms, dfs, prefix),
@@ -1057,7 +1052,6 @@ def match_lattice_tokens(
     query_analyzer: str = "default",
     explain: bool = False,
     doclen: DataFrame | None = None,
-    vocab: DataFrame | None = None,
 ) -> DataFrame:
     """Token-table match, the one entry for a pre-materialized token table
     (the index, ``match_snippets``, a user's token table): ``token IN
@@ -1075,15 +1069,11 @@ def match_lattice_tokens(
     ``_compose`` reads them with the document lengths.
 
     ``doclen``: precomputed (doc_id, dl[, dl_norm]) statistics table (the
-    materialized index writes one).  Required when ``tokens`` is a pruned
-    view: per-doc lengths can't be recovered from pruned postings, while
-    per-term df CAN (a term's postings all live in its own bucket).
-    Without it the lengths are aggregated from ``tokens``.
-
-    ``vocab``: precomputed (token, df) term dictionary (the index writes
-    one at ``{path}_vocab``).  When given, ``similarity='lucene'`` takes
-    its dfs from it — required for ``phrase_prefix`` over a pruned view
-    (the expansion vocabulary spans buckets the view may not include).
+    materialized index writes one), so the lengths cost no scan beyond
+    the candidate postings.  Without it they are aggregated from
+    ``tokens``.  The document frequencies always come from the stats
+    rows: the candidate filter keeps every document holding a candidate
+    term, so they are exact whenever ``tokens`` holds every posting.
 
     Semantics note: with ``zero_terms_query='all'`` this path returns only
     documents that produced at least one token (all-media documents are not
@@ -1107,22 +1097,12 @@ def match_lattice_tokens(
 
     composed = params.include_span_score
     lucene = composed and params.similarity == "lucene"
-    if lucene:
-        if phrase_prefix and doclen is not None and vocab is None:
-            raise ValueError(
-                "similarity='lucene' with phrase_prefix over a pruned "
-                "index view (doclen passed) needs the index's vocabulary "
-                "table to supply the expansion set's document "
-                "frequencies — pass vocab (write_token_index writes it "
-                "at {path}_vocab), or use match_lattice_indexed which "
-                "wires it automatically"
-            )
-        if doclen is not None and "dl_norm" not in doclen.columns:
-            raise ValueError(
-                "similarity='lucene' needs a doclen table with a dl_norm "
-                "column; rebuild the token index with this version's "
-                "write_token_index"
-            )
+    if lucene and doclen is not None and "dl_norm" not in doclen.columns:
+        raise ValueError(
+            "similarity='lucene' needs a doclen table with a dl_norm "
+            "column; rebuild the token index with this version's "
+            "write_token_index"
+        )
 
     cand = tokens.filter(candidate_pred(terms, phrase_prefix)).select(
         "doc_id", "token", "abs_pos", "score", "seq"
@@ -1157,7 +1137,7 @@ def match_lattice_tokens(
         stats = _persisted(cand.mapInPandas(
             run, schema=_kernel_schema(SPAN_STATS_SCHEMA, explain)
         ))
-        hits = _compose(stats, doclen, terms, params, phrase_prefix, vocab)
+        hits = _compose(stats, doclen, terms, params, phrase_prefix)
     else:
         hits = _boosted(
             cand.mapInPandas(run, schema=_kernel_schema(HITS_SCHEMA, explain)),

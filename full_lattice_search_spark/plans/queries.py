@@ -419,11 +419,10 @@ SQL_MATCH_LUCENE_PREFIX = _sql_match_lucene_sim(
 
 
 def q_match_lucene_prefix_indexed(spark, sf_dir):
-    """similarity='lucene' × phrase_prefix THROUGH the pruned token
-    index — the combination that used to raise: expansion buckets and
-    the idf blend's document frequencies come from the index's vocab
-    table, and the result must stay hash-identical to the full-scan
-    oracle."""
+    """similarity='lucene' × phrase_prefix THROUGH the token index: the
+    prefix filter is pushed into the token-sorted postings scan, the idf
+    blend's document frequencies are counted from the candidate postings,
+    and the result must stay hash-identical to the full-scan oracle."""
     import tempfile
 
     from full_lattice_search_spark.plans.lattice_view import lattice_docs
@@ -580,8 +579,9 @@ SQL_MATCH_MULTI_PHRASE = _sql_match_chain(
 
 
 def q_match_indexed_2(spark, sf_dir):
-    """Same query as match_ordered_2 but through the materialized,
-    bucket-partitioned token index (partition pruning at the scan)."""
+    """Same query as match_ordered_2 but through the materialized token
+    index (postings sorted by token; the term filter prunes row groups
+    at the scan)."""
     import tempfile
 
     from full_lattice_search_spark.sources.token_index import (

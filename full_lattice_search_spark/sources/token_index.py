@@ -1,20 +1,21 @@
 """Materialized token index — the engine's analog of the inverted index.
 
 The reference rides on Lucene postings: a term query touches only that
-term's postings list.  The Spark-native equivalent is a token table
-*partitioned by a hash bucket of the token*: a `match_lattice` over the
-index resolves its query terms to bucket ids at plan time, so the scan
-prunes to |terms| partitions out of ``n_token_buckets`` — at 100 TB the
-difference between reading everything and reading ~1/256 of the index per
-term.  Within a bucket, `token IN (...)` still pushes into parquet
-row-group stats.
+term's postings list.  The Spark-native equivalent is one flat parquet
+table of postings *sorted by* ``(token, doc_id)``.  Parquet keeps min/max
+statistics for every row group and, in its column index, for every page
+(at most 20,000 rows); the sort makes those token ranges narrow and
+disjoint, so a pushed ``token IN (...)`` or ``startswith`` filter skips
+every row group and page that cannot hold a query term, and a lookup
+reads about as many rows as the term has postings however large the index
+grows.  No bucket ids to resolve, no partition directories to list and no
+caller-side knob that must match the writer.
 
-Layout note: on a real deployment this is an Iceberg table with
-``bucket(n, token)`` partition transform plus a secondary sort on
-``(doc_id, abs_pos)``; plain parquet `partitionBy` reproduces the pruning
-behavior in this sandbox.
-The postings are rebalanced by bucket before the write, so each bucket is
-one file — what Iceberg's ``write.distribution-mode=hash`` does.
+Layout note: on a real deployment this is an Iceberg table with a
+``token`` sort order; Iceberg's per-file column bounds prune files the
+way the parquet footers prune row groups here.  Reads pass explicit
+schemas, so planning an indexed query launches no listing or
+schema-inference job.
 """
 
 from __future__ import annotations
@@ -25,69 +26,42 @@ from pyspark.sql import functions as F
 
 from full_lattice_search_spark.config import LatticeConfig, MatchLatticeParams
 from full_lattice_search_spark.functions.tokenizer import lattice_tokenize
-from full_lattice_search_spark.operators.match import (
-    analyze_query,
-    match_lattice_tokens,
-)
+from full_lattice_search_spark.operators.match import match_lattice_tokens
+from full_lattice_search_spark.schema import TOKENS_SCHEMA
 
-DEFAULT_TOKEN_BUCKETS = 64
-
-
-def token_bucket_col(token_col: str, n_buckets: int) -> F.Column:
-    return F.pmod(F.xxhash64(F.col(token_col)), F.lit(n_buckets)).cast("int")
+# ``{path}_doclen``, as write_token_index aggregates it.
+_DOCLEN_SCHEMA = "doc_id STRING, dl BIGINT, dl_norm BIGINT"
 
 
 def write_token_index(
     docs: DataFrame,
     path: str,
     config: LatticeConfig | None = None,
-    n_token_buckets: int = DEFAULT_TOKEN_BUCKETS,
 ) -> None:
-    """Tokenize the corpus and persist the postings partitioned by token
-    bucket.  The tokens are rebalanced by bucket before the write (a hash
-    exchange; AQE splits a skewed bucket), so each bucket directory holds
-    one file rather than one per tokenizer task.  The write is a static
-    full overwrite: a rebuild replaces every bucket, whatever the
-    session's ``partitionOverwriteMode``.
+    """Tokenize the corpus and persist the postings sorted by
+    ``(token, doc_id)`` — one range-partitioned, flat parquet directory
+    whose row groups cover disjoint token ranges.  The write is a full
+    overwrite; with no partition columns the session's
+    ``partitionOverwriteMode`` does not apply.
 
-    Also persists two statistics tables (the index-statistics analog —
-    Lucene keeps norms/doc lengths/term dictionaries at index time):
-
-    - ``{path}_doclen``: per-document lengths.  Queries with
-      ``include_span_score`` read BM25 stats from it instead of
-      re-scanning the pruned postings (which would be both wrong and a
-      full scan).  Carries both ``dl`` (full token count — avgdl's basis)
-      and ``dl_norm`` (overlap-discounted count, what a Lucene norm
-      stores) so BOTH similarity flavors work over the pruned index.
-    - ``{path}_vocab``: the term dictionary — one row per distinct token
-      with its document frequency and bucket id, range-partitioned and
-      sorted BY TOKEN so a prefix query prunes to the prefix's byte range
-      via parquet min/max stats.  This is what lets ``phrase_prefix``
-      (and its ``similarity='lucene'`` idf blend over the expansion
-      vocabulary) run against the pruned index: the expansion token set
-      and dfs come from this tiny table, never from a full postings scan.
-      Postings : vocab size ratio is corpus_tokens : distinct_tokens —
-      at 100 TB the vocab is a rounding error next to the postings.
+    Also persists ``{path}_doclen`` (the index-statistics analog — Lucene
+    keeps norms at index time): per-document lengths, so queries with
+    ``include_span_score`` read BM25 stats from it instead of re-scanning
+    the postings.  It carries both ``dl`` (full token count — avgdl's
+    basis) and ``dl_norm`` (overlap-discounted count, what a Lucene norm
+    stores), so both similarity flavors work over the index.  Document
+    frequencies need no table: the candidate filter keeps every document
+    holding a query term, and the composer counts them from its stats.
 
     The corpus is tokenized once: the postings write fills a persisted
-    token frame, both tables aggregate that frame, and it is released
-    before the call returns, also when a write raises.  The postings are
-    never read back (no partition listing or schema inference over the
-    bucket files just written)."""
-    config = config or LatticeConfig()
-    tokens = (
-        lattice_tokenize(docs, config)
-        .withColumn("token_bucket", token_bucket_col("token", n_token_buckets))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    token frame, the doclen table aggregates that frame, and it is
+    released before the call returns, also when a write raises.  The
+    postings are never read back."""
+    tokens = lattice_tokenize(docs, config or LatticeConfig()).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     try:
-        (
-            tokens.hint("rebalance", "token_bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("token_bucket")
-            .parquet(path)
-        )
+        tokens.orderBy("token", "doc_id").write.mode("overwrite").parquet(path)
         (
             tokens.groupBy("doc_id")
             .agg(
@@ -96,17 +70,6 @@ def write_token_index(
             )
             .write.mode("overwrite")
             .parquet(f"{path}_doclen")
-        )
-        (
-            tokens.groupBy("token")
-            .agg(
-                F.countDistinct("doc_id").alias("df"),
-                F.min("token_bucket").alias("token_bucket"),
-            )
-            .repartitionByRange(8, "token")
-            .sortWithinPartitions("token")
-            .write.mode("overwrite")
-            .parquet(f"{path}_vocab")
         )
     finally:
         tokens.unpersist()
@@ -119,55 +82,33 @@ def match_lattice_indexed(
     config: LatticeConfig | None = None,
     params: MatchLatticeParams | None = None,
     top_k: int | None = None,
-    n_token_buckets: int = DEFAULT_TOKEN_BUCKETS,
     phrase_prefix: bool = False,
     dtype: type | None = None,
 ) -> DataFrame:
-    """match_lattice over the materialized index: plan-time bucket
-    resolution → partition pruning → rowgroup pushdown → span DP.
+    """match_lattice over the materialized index: the candidate filter
+    (``token IN terms``, plus ``startswith`` for ``phrase_prefix``) is
+    pushed into the postings scan, where the row-group statistics skip
+    every row group outside the query's token ranges, then the span DP.
+    Planning launches no Spark job (Lucene similarity excepted: its
+    corpus constants are collected while composing).
 
-    ``phrase_prefix``: the last term matches as a prefix.  Its expansion
-    tokens hash to arbitrary buckets, so the bucket list is resolved from
-    the index's vocabulary table (``{path}_vocab`` — tiny, token-sorted,
-    prefix-range-pruned) and unioned with the fixed terms' buckets; the
-    same vocab supplies the expansion document frequencies for the
-    ``similarity='lucene'`` idf blend, keeping the postings scan pruned.
-    The bucket list collect is bounded by ``n_token_buckets`` values."""
-    config = config or LatticeConfig()
+    An index without ``dl_norm`` in its doclen table (written before that
+    column existed) fails a ``similarity='lucene'`` query with a rebuild
+    message rather than scoring NULL."""
     params = params or MatchLatticeParams()
-    terms = analyze_query(query, config)
-    tokens = spark.read.parquet(index_path)
-    vocab = None
-    if phrase_prefix and terms:
-        vocab = spark.read.parquet(f"{index_path}_vocab")
-    if terms:
-        # resolve buckets on the driver with the same hash the writer used
-        flat = [
-            t
-            for slot in terms
-            for t in (slot if isinstance(slot, list) else [slot])
-        ]
-        bucket_df = spark.createDataFrame(
-            [(t,) for t in flat], "token string"
-        ).select(token_bucket_col("token", n_token_buckets).alias("b"))
-        buckets = {r["b"] for r in bucket_df.collect()}
-        if vocab is not None:
-            # expansion buckets from the vocab (≤ n_token_buckets rows)
-            buckets |= {
-                r["token_bucket"]
-                for r in vocab.filter(
-                    F.col("token").startswith(terms[-1])
-                )
-                .select("token_bucket")
-                .distinct()
-                .collect()
-            }
-        tokens = tokens.filter(F.col("token_bucket").isin(sorted(buckets)))
+    tokens = spark.read.schema(TOKENS_SCHEMA).parquet(index_path)
     doclen = None
     if params.include_span_score:
-        doclen = spark.read.parquet(f"{index_path}_doclen")
+        doclen = spark.read.schema(_DOCLEN_SCHEMA).parquet(
+            f"{index_path}_doclen"
+        ).selectExpr(
+            "doc_id", "dl",
+            "coalesce(dl_norm, raise_error('the token index has no dl_norm "
+            "column; rebuild the token index with write_token_index')) "
+            "AS dl_norm",
+        )
     kw = {} if dtype is None else {"dtype": dtype}
     return match_lattice_tokens(
         tokens, query, config, params, top_k=top_k, doclen=doclen,
-        phrase_prefix=phrase_prefix, vocab=vocab, **kw,
+        phrase_prefix=phrase_prefix, **kw,
     )

@@ -1,5 +1,5 @@
-"""Materialized token index: partition pruning + result parity with the
-direct document-scan path."""
+"""Materialized token index: token-sorted layout, scan pushdown, planning
+without jobs, and result parity with the direct document-scan path."""
 
 from __future__ import annotations
 
@@ -18,7 +18,7 @@ from full_lattice_search_spark.sources.token_index import (
 def index_path(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("index") / "tokens")
     docs = synth_documents(spark, 60, seed=13, mega_every=0)
-    write_token_index(docs, path, LatticeConfig(), n_token_buckets=16)
+    write_token_index(docs, path, LatticeConfig())
     return path
 
 
@@ -33,7 +33,6 @@ def test_indexed_match_parity_with_scan(spark, index_path):
         (r["doc_id"], round(r["score"], 6), r["n_spans"])
         for r in match_lattice_indexed(
             spark, index_path, "the quick", LatticeConfig(), params,
-            n_token_buckets=16,
         ).collect()
     }
     assert indexed == direct
@@ -41,10 +40,10 @@ def test_indexed_match_parity_with_scan(spark, index_path):
 
 
 def test_indexed_lucene_similarity_parity_with_scan(spark, index_path):
-    """similarity='lucene' over the PRUNED index: per-doc lengths come
-    from the persisted doclen stats table (dl + dl_norm), per-term df
-    from the term's own bucket — results must equal the full doc-scan
-    path bit-for-bit."""
+    """similarity='lucene' over the index: per-doc lengths come from the
+    persisted doclen stats table (dl + dl_norm), per-term df from the
+    candidate postings — results must equal the full doc-scan path
+    bit-for-bit."""
     docs = synth_documents(spark, 60, seed=13, mega_every=0)
     params = MatchLatticeParams(slop=3, similarity="lucene")
     key = lambda rows: sorted(
@@ -57,35 +56,67 @@ def test_indexed_lucene_similarity_parity_with_scan(spark, index_path):
     indexed = key(
         match_lattice_indexed(
             spark, index_path, "the quick", LatticeConfig(), params,
-            n_token_buckets=16,
         ).collect()
     )
     assert indexed == direct
     assert len(indexed) > 0
 
 
-def test_index_scan_prunes_partitions(spark, index_path):
+@pytest.mark.parametrize(
+    "query, phrase_prefix, pushed",
+    [("quick", False, "EqualTo(token,quick)"),
+     ("the quick", False, "In(token, [quick,the])"),
+     ("the qu", True, "StringStartsWith(token,qu)")],
+    ids=["term", "terms", "prefix"],
+)
+def test_index_scan_pushes_the_token_filter(
+    spark, index_path, query, phrase_prefix, pushed
+):
+    """The candidate filter reaches the parquet scan, where the row-group
+    token statistics prune; there is no partition column to filter."""
     hits = match_lattice_indexed(
-        spark, index_path, "quick", LatticeConfig(), MatchLatticeParams(),
-        n_token_buckets=16,
+        spark, index_path, query, LatticeConfig(), MatchLatticeParams(),
+        phrase_prefix=phrase_prefix,
     )
     plan = hits._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "token_bucket" in plan.split("PartitionFilters")[1][:200]
-    # rowgroup-level pushdown still applies within the bucket
-    assert "PushedFilters" in plan
+    scan = plan[plan.index("PushedFilters"):].split("\n")[0]
+    assert pushed in scan
+    assert "token_bucket" not in plan
+    assert "PartitionFilters: []" in plan
 
 
-def test_one_postings_file_per_token_bucket(index_path):
-    """The postings are rebalanced by bucket before the write: each
-    token_bucket directory holds exactly one data file, not one per
-    tokenizer task."""
-    from pathlib import Path
+def test_postings_files_hold_disjoint_sorted_token_ranges(spark, tmp_path):
+    """The postings are one flat directory sorted by (token, doc_id): each
+    file's tokens are sorted, and its footer's token range ends where the
+    next file's begins.  Neighbours may share an endpoint token — the
+    range partitioner splits on (token, doc_id), so a frequent token can
+    straddle two files.  AQE would coalesce this small corpus into one
+    file, so the write here keeps every range partition."""
+    import pyarrow.parquet as pq
 
-    bucket_dirs = sorted(Path(index_path).glob("token_bucket=*"))
-    assert len(bucket_dirs) == 16
-    for d in bucket_dirs:
-        assert len(list(d.glob("*.parquet"))) == 1, d
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    path = tmp_path / "tokens"
+    spark.conf.set(key, "false")
+    try:
+        write_token_index(synth_documents(spark, 60, seed=13, mega_every=0),
+                          str(path))
+    finally:
+        spark.conf.unset(key)
+    files = sorted(path.glob("*.parquet"))
+    assert len(files) > 1
+    assert not list(path.glob("*=*"))
+    ranges = []
+    for f in files:
+        tokens = pq.read_table(f, columns=["token"]).column("token").to_pylist()
+        assert tokens == sorted(tokens), f
+        meta = pq.ParquetFile(f).metadata
+        col = meta.schema.names.index("token")
+        stats = [meta.row_group(g).column(col).statistics
+                 for g in range(meta.num_row_groups)]
+        ranges.append((min(s.min for s in stats), max(s.max for s in stats)))
+    ranges.sort()
+    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
+        assert hi <= lo, ranges
 
 
 def test_rebuild_is_full_overwrite_under_dynamic_session(spark, tmp_path):
@@ -126,9 +157,9 @@ def test_read_source_dispatch(spark, tmp_path):
 
 
 def test_indexed_phrase_prefix_parity_with_scan(spark, index_path):
-    """phrase_prefix over the pruned index: expansion buckets resolved
-    from the vocab table must make the span DP see every prefix-matching
-    token's postings — results equal the full doc-scan path."""
+    """phrase_prefix over the index: the pushed ``startswith`` filter must
+    let the span DP see every prefix-matching token's postings — results
+    equal the full doc-scan path."""
     docs = synth_documents(spark, 60, seed=13, mega_every=0)
     params = MatchLatticeParams(slop=3)
     key = lambda rows: sorted(
@@ -142,7 +173,7 @@ def test_indexed_phrase_prefix_parity_with_scan(spark, index_path):
     indexed = key(
         match_lattice_indexed(
             spark, index_path, "the qu", LatticeConfig(), params,
-            n_token_buckets=16, phrase_prefix=True,
+            phrase_prefix=True,
         ).collect()
     )
     assert indexed == direct
@@ -150,10 +181,9 @@ def test_indexed_phrase_prefix_parity_with_scan(spark, index_path):
 
 
 def test_indexed_lucene_phrase_prefix_parity_with_scan(spark, index_path):
-    """similarity='lucene' × phrase_prefix over the PRUNED index — the
-    combination that used to raise: the expansion idf blend now reads
-    document frequencies from the vocab table and must equal the full
-    doc-scan path bit-for-bit."""
+    """similarity='lucene' × phrase_prefix over the index: the expansion
+    idf blend counts document frequencies from the candidate postings and
+    must equal the full doc-scan path bit-for-bit."""
     docs = synth_documents(spark, 60, seed=13, mega_every=0)
     params = MatchLatticeParams(slop=3, similarity="lucene")
     key = lambda rows: sorted(
@@ -168,33 +198,11 @@ def test_indexed_lucene_phrase_prefix_parity_with_scan(spark, index_path):
     indexed = key(
         match_lattice_indexed(
             spark, index_path, "the qu", LatticeConfig(), params,
-            n_token_buckets=16, phrase_prefix=True,
+            phrase_prefix=True,
         ).collect()
     )
     assert indexed == direct
     assert len(indexed) > 0
-
-
-def test_lucene_prefix_pruned_without_vocab_still_raises(spark, index_path):
-    """The guard survives for callers that hand match_lattice_tokens a
-    pruned view + doclen but NO vocab — silently-wrong idf blends must
-    stay impossible."""
-    import pyspark.sql.functions as F
-
-    from full_lattice_search_spark.operators.match import (
-        match_lattice_tokens,
-    )
-
-    tokens = spark.read.parquet(index_path).filter(
-        F.col("token_bucket") == 0
-    )
-    doclen = spark.read.parquet(f"{index_path}_doclen")
-    with pytest.raises(ValueError, match="vocab"):
-        match_lattice_tokens(
-            tokens, "the qu", LatticeConfig(),
-            MatchLatticeParams(slop=3, similarity="lucene"),
-            phrase_prefix=True, doclen=doclen,
-        )
 
 
 def _persistent_rdds(spark) -> int:
@@ -203,8 +211,8 @@ def _persistent_rdds(spark) -> int:
 
 def test_write_never_reads_parquet(spark, tmp_path, monkeypatch):
     """The stats come from the tokens the postings write produced: no
-    parquet read (no partition listing, no schema inference, no rescan of
-    the bucket files just written)."""
+    parquet read (no listing, no schema inference, no rescan of the
+    postings just written)."""
     import pyspark.sql.readwriter as rw
 
     docs = synth_documents(spark, 20, seed=53, mega_every=0)
@@ -216,18 +224,18 @@ def test_write_never_reads_parquet(spark, tmp_path, monkeypatch):
         return real(self, *paths, **kw)
 
     monkeypatch.setattr(rw.DataFrameReader, "parquet", spy)
-    write_token_index(docs, str(tmp_path / "tokens"), n_token_buckets=4)
+    write_token_index(docs, str(tmp_path / "tokens"))
     assert reads == []
 
 
 def test_write_releases_token_cache(spark, tmp_path, monkeypatch):
-    """The token frame persisted for the three writes is released when the
+    """The token frame persisted for the two writes is released when the
     call returns and when a write raises."""
     import pyspark.sql.readwriter as rw
 
     docs = synth_documents(spark, 20, seed=59, mega_every=0)
     before = _persistent_rdds(spark)
-    write_token_index(docs, str(tmp_path / "ok"), n_token_buckets=4)
+    write_token_index(docs, str(tmp_path / "ok"))
     assert _persistent_rdds(spark) == before
 
     class Boom(RuntimeError):
@@ -242,13 +250,13 @@ def test_write_releases_token_cache(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(rw.DataFrameWriter, "parquet", doclen_fails)
     with pytest.raises(Boom):
-        write_token_index(docs, str(tmp_path / "fails"), n_token_buckets=4)
+        write_token_index(docs, str(tmp_path / "fails"))
     assert _persistent_rdds(spark) == before
 
 
 def test_stats_equal_aggregates_of_the_postings(spark, index_path):
-    """``_doclen`` and ``_vocab`` equal the same aggregates computed from
-    a plain re-read of the written postings."""
+    """``_doclen`` equals the same aggregate computed from a plain re-read
+    of the written postings."""
     import pyspark.sql.functions as F
 
     postings = spark.read.parquet(index_path)
@@ -257,13 +265,104 @@ def test_stats_equal_aggregates_of_the_postings(spark, index_path):
         F.count("*").alias("dl"),
         F.sum((F.col("pos_inc") > 0).cast("long")).alias("dl_norm"),
     )
-    vocab = postings.groupBy("token").agg(
-        F.countDistinct("doc_id").alias("df"),
-        F.min("token_bucket").alias("token_bucket"),
-    )
     cols = ("doc_id", "dl", "dl_norm")
     got = rows(spark.read.parquet(f"{index_path}_doclen"), *cols)
     assert got == rows(doclen, *cols)
     assert len(got) == 60
-    cols = ("token", "df", "token_bucket")
-    assert rows(spark.read.parquet(f"{index_path}_vocab"), *cols) == rows(vocab, *cols)
+
+
+def test_lucene_over_index_without_dl_norm_says_rebuild(
+    spark, index_path, tmp_path
+):
+    """An index whose doclen table predates ``dl_norm`` reads NULLs under
+    the explicit schema: a Lucene query over it must fail with the rebuild
+    message, not score NULL.  Engine BM25 needs only ``dl`` and still
+    runs."""
+    path = str(tmp_path / "tokens")
+    spark.read.parquet(index_path).write.parquet(path)
+    spark.read.parquet(f"{index_path}_doclen").drop("dl_norm").write.parquet(
+        f"{path}_doclen"
+    )
+    lucene = match_lattice_indexed(
+        spark, path, "the quick", LatticeConfig(),
+        MatchLatticeParams(slop=3, similarity="lucene"),
+    )
+    with pytest.raises(Exception, match="rebuild the token index"):
+        lucene.collect()
+    engine = match_lattice_indexed(
+        spark, path, "the quick", LatticeConfig(), MatchLatticeParams(slop=3)
+    )
+    assert engine.count() > 0
+
+
+# Plan-time jobs over the older 64-bucket layout, for comparison: 3, 4, 6
+# and 7 (payload, bm25, payload+prefix, bm25+prefix); Lucene 8-10.
+@pytest.mark.parametrize("phrase_prefix", [False, True])
+@pytest.mark.parametrize(
+    "params",
+    [MatchLatticeParams(slop=3, include_span_score=False),
+     MatchLatticeParams(slop=3)],
+    ids=["payload", "bm25"],
+)
+def test_indexed_query_plans_without_jobs(
+    spark, index_path, count_jobs, params, phrase_prefix
+):
+    """Explicit schemas over a flat directory: no listing job, no schema
+    inference, no driver-side collect while planning."""
+    _, jobs = count_jobs(lambda: match_lattice_indexed(
+        spark, index_path, "the qu" if phrase_prefix else "the quick",
+        LatticeConfig(), params, top_k=5, phrase_prefix=phrase_prefix,
+    ))
+    assert jobs == 0
+
+
+@pytest.mark.parametrize("phrase_prefix", [False, True])
+def test_indexed_lucene_plans_only_the_composer_collects(
+    spark, index_path, count_jobs, phrase_prefix
+):
+    """What a Lucene query still runs while planning is ``_compose``'s
+    two collects (ROADMAP L): the dfs over the stats rows and the corpus
+    constants over the doclen table, each a few jobs under AQE (4 when
+    an equal stats frame is already cached, 6 when not).  Reading the
+    index adds none."""
+    _, jobs = count_jobs(lambda: match_lattice_indexed(
+        spark, index_path, "the qu" if phrase_prefix else "the quick",
+        LatticeConfig(), MatchLatticeParams(slop=3, similarity="lucene"),
+        phrase_prefix=phrase_prefix,
+    ))
+    assert jobs <= 6
+
+
+def test_bucket_partitioned_index_reads_the_same(spark, index_path, tmp_path):
+    """An index written in the older layout — postings ``partitionBy`` an
+    ``xxhash64`` token bucket — still reads: the partition column rides
+    along unused and every query returns the fresh index's rows."""
+    import pyspark.sql.functions as F
+
+    from full_lattice_search_spark.functions.tokenizer import lattice_tokenize
+
+    old = str(tmp_path / "tokens")
+    tokens = lattice_tokenize(
+        synth_documents(spark, 60, seed=13, mega_every=0), LatticeConfig()
+    )
+    tokens.withColumn(
+        "token_bucket", F.pmod(F.xxhash64("token"), F.lit(64)).cast("int")
+    ).write.partitionBy("token_bucket").parquet(old)
+    spark.read.parquet(f"{index_path}_doclen").write.parquet(f"{old}_doclen")
+
+    key = lambda rows: sorted(
+        (r["doc_id"], r["score"], r["n_spans"]) for r in rows
+    )
+    for query, prefix in (("the quick", False), ("the qu", True)):
+        for params in (MatchLatticeParams(slop=3, include_span_score=False),
+                       MatchLatticeParams(slop=3),
+                       MatchLatticeParams(slop=3, similarity="lucene")):
+            got, want = (
+                key(match_lattice_indexed(
+                    spark, p, query, LatticeConfig(), params,
+                    phrase_prefix=prefix,
+                ).collect())
+                for p in (old, index_path)
+            )
+            assert got == want, (query, params)
+            assert got
